@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.local import local_frame
+
 _FOLD = {"mostly_male": "male", "mostly_female": "female", "andy": "unknown"}
 
 # Minimal deterministic fallback (public common-name list). Only used
@@ -88,7 +90,7 @@ def _mapping() -> dict[str, str]:
 
 def gender_lookup_df(spark: SparkSession) -> DataFrame:
     rows = [(k, v) for k, v in sorted(_mapping().items())]
-    return spark.createDataFrame(rows, GENDER_SCHEMA)
+    return local_frame(spark, rows, GENDER_SCHEMA)
 
 
 def with_gender(

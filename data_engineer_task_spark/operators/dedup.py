@@ -485,10 +485,13 @@ def jaccard_join_exact(
     above 2/7) never over-tighten an exact-boundary pair away — the
     slack can only admit a few extra candidates, never lose one.
 
-    Caching note: the shingle-set frame stays persisted after the
-    returned DataFrame is consumed (it backs its lineage); loop or
-    service callers should ``spark.catalog.clearCache()`` between
-    corpora — same constraint as ``near_duplicates``."""
+    Caching note: TWO frames stay persisted after the returned
+    DataFrame is consumed, because both back its lineage and neither
+    can be unpersisted while it does: the shingle-set frame (unless
+    the caller passed ``shingle_sets=``, which stays the caller's) and
+    the candidate-pair frame. Loop or service callers should
+    ``spark.catalog.clearCache()`` between corpora — same constraint
+    as ``near_duplicates``."""
     if shingle_sets is not None:
         sets = shingle_sets  # caller-persisted shared frame
     else:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -286,13 +288,4 @@ def _driver_union_find(und: DataFrame) -> DataFrame:
             T.StructField("cluster", id_type, False),
         ]
     )
-    rows = [(n, find(n)) for n in parent]
-    # Ship the labels back through pandas→Arrow: a plain row-list
-    # createDataFrame builds a Python-RDD-backed frame whose every
-    # downstream task spins a Python worker (measured 12s for a
-    # 32-task aggregate over ~500 rows); the Arrow path lands as
-    # JVM-side batches with no Python in the execution plan.
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["node", "cluster"])
-    return und.sparkSession.createDataFrame(pdf, schema)
+    return local_frame(und.sparkSession, [(n, find(n)) for n in parent], schema)

@@ -25,6 +25,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
+
+from ..sources.local import local_frame
 
 
 def as_double(vec: Column) -> Column:
@@ -95,7 +98,8 @@ def cosine_topk(
     base = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
     qrows = base.where(query_filter).orderBy(id_col).collect()
     if not qrows:
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [],
             base.select(
                 F.col(id_col).alias("query_id"),
@@ -524,9 +528,17 @@ def ivf_topk(
         probe_rows.extend(
             (qid, int(c), [float(x) for x in q]) for c in cells
         )
-    spark = assigned.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, ["query_id", "cluster", "_q"]
+    # query ids share the corpus id domain
+    probes = local_frame(
+        assigned.sparkSession,
+        probe_rows,
+        T.StructType(
+            [
+                T.StructField("query_id", assigned.schema[id_col].dataType),
+                T.StructField("cluster", T.LongType()),
+                T.StructField("_q", T.ArrayType(T.DoubleType())),
+            ]
+        ),
     )
 
     @F.pandas_udf("double")
@@ -635,57 +647,58 @@ def pq_fit(
     early-stop therefore returns exactly what the sequential loop
     did). Jobs: 1 + n_iters, down from m·(1 + n_iters)."""
     base = emb.select(id_col, as_double(F.col(vec_col)).alias("_v")).persist()
-    init = base.orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need >= {k} vectors, got {len(init)}")
-    dim = len(init[0]["_v"])
-    if dim % m != 0:
-        base.unpersist(blocking=False)
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    codebooks = [
-        [
+    try:
+        init = base.orderBy(id_col).limit(k).collect()
+        if len(init) < k:
+            raise ValueError(f"need >= {k} vectors, got {len(init)}")
+        dim = len(init[0]["_v"])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        dsub = dim // m
+        codebooks = [
             [
-                _round_half_away_scalar(float(x), round_to)
-                for x in r["_v"][j * dsub : (j + 1) * dsub]
-            ]
-            for r in init
-        ]
-        for j in range(m)
-    ]
-    for _ in range(n_iters):
-        codes = _pq_codes_udf(codebooks, round_to)
-        rows = (
-            base.select("_v", F.posexplode(codes(F.col("_v"))).alias("_j", "_cl"))
-            .groupBy("_j", "_cl")
-            .agg(
-                *[
-                    F.avg(
-                        F.element_at("_v", F.col("_j") * dsub + d + 1)
-                    ).alias(f"c{d}")
-                    for d in range(dsub)
+                [
+                    _round_half_away_scalar(float(x), round_to)
+                    for x in r["_v"][j * dsub : (j + 1) * dsub]
                 ]
-            )
-            .collect()
-        )
-        new = {
-            (r["_j"], r["_cl"]): [
-                _round_half_away_scalar(float(r[f"c{d}"]), round_to)
-                for d in range(dsub)
+                for r in init
             ]
-            for r in rows
-        }
-        updated = [
-            [new.get((j, c), codebooks[j][c]) for c in range(k)]
             for j in range(m)
         ]
-        if updated == codebooks:
-            # Rounded fixpoint in every subspace: further iterations
-            # are no-ops (same early-stop rule as kmeans_fit).
-            break
-        codebooks = updated
-    base.unpersist(blocking=False)
-    return codebooks
+        for _ in range(n_iters):
+            codes = _pq_codes_udf(codebooks, round_to)
+            rows = (
+                base.select("_v", F.posexplode(codes(F.col("_v"))).alias("_j", "_cl"))
+                .groupBy("_j", "_cl")
+                .agg(
+                    *[
+                        F.avg(
+                            F.element_at("_v", F.col("_j") * dsub + d + 1)
+                        ).alias(f"c{d}")
+                        for d in range(dsub)
+                    ]
+                )
+                .collect()
+            )
+            new = {
+                (r["_j"], r["_cl"]): [
+                    _round_half_away_scalar(float(r[f"c{d}"]), round_to)
+                    for d in range(dsub)
+                ]
+                for r in rows
+            }
+            updated = [
+                [new.get((j, c), codebooks[j][c]) for c in range(k)]
+                for j in range(m)
+            ]
+            if updated == codebooks:
+                # Rounded fixpoint in every subspace: further iterations
+                # are no-ops (same early-stop rule as kmeans_fit).
+                break
+            codebooks = updated
+        return codebooks
+    finally:
+        base.unpersist(blocking=False)
 
 
 def pq_encode(

@@ -122,7 +122,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "revenue_by_nation",
     """
     SELECT n.n_name AS nation,
-           round((sum(l.l_extendedprice * (1 - l.l_discount))) * 100.0) / 100.0 AS revenue,
+           round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000.0)
+                          AS BIGINT)) / 100.0) / 100.0 AS revenue,
            CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -140,12 +141,25 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint is gated on footer-measured size (``gated_broadcast``, r10
     audit) — under the cap only the lineitem⋈orders join shuffles,
     co-partitioned on orderkey; past it the customer join falls back
-    to the planner instead of OOMing every executor at 100 TB."""
+    to the planner instead of OOMing every executor at 100 TB.
+
+    Revenue sums exact 1e-4-unit BIGINTs: price·(1−disc) has 4 true
+    decimals, so round(x·10⁴) is the same integer on both engines and
+    the sum is association-free. A double sum is not — at sf0.01 two
+    nations' exact revenue sits on a half cent, and the partial-merge
+    order decided which way it rounded. Dividing the unit sum by 100
+    lands exactly on that half cent, which both engines round away
+    from zero. The accumulator widens to decimal on the same footer
+    bound as ``orders_incremental_join_merge``."""
+    from .analytics_ext34 import _lineitem_revenue_bound
+
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
+    rev_t = "decimal(38,0)" if _lineitem_revenue_bound(sf_dir, li) >= (1 << 62) else "long"
+    units = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000.0)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(gated_broadcast(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
@@ -153,7 +167,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            (F.round((F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))) * 100.0) / 100.0).alias("revenue"),
+            (F.round(F.sum(units.cast(rev_t)) / 100.0) / 100.0).alias("revenue"),
             F.countDistinct("o_orderkey").alias("n_orders"),
         )
         .orderBy(F.desc_nulls_last("revenue"), F.asc("nation"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .analytics import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
 
 
@@ -421,7 +422,8 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, d + 1):
         trace = trace + C[(i, i)]
     top_dim = min(range(1, d + 1), key=lambda k: (-abs(v[k - 1]), k))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(int(n), float(lam), float(lam / trace), int(top_dim),
           float(abs(v[top_dim - 1])))],
         "n_vectors long, _lam double, _frac double, top_dim int, _load double",

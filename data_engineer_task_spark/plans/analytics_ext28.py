@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .analytics import _t, q
 
 # --- Bloom parameters -------------------------------------------------------
@@ -262,9 +263,7 @@ def price_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = c.agg(F.count(F.lit(1)).cast("long").alias("n"))
     targets = (
-        spark.createDataFrame(
-            [(q, qn, qd) for q, qn, qd in _QS], ["q", "qn", "qd"]
-        )
+        local_frame(spark, list(_QS), "q string, qn bigint, qd bigint")
         .crossJoin(F.broadcast(n))
         .select(
             "q",

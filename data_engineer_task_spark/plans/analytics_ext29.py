@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .analytics import _t, _t_wide, q
 
 _ROUNDS = 4
@@ -107,8 +108,8 @@ def doc_bpe_phrase_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r, f"{a} {b}", cnt, total)
         for r, (a, b, cnt, total) in enumerate(stats, 1)
     ]
-    out = spark.createDataFrame(
-        rows, "round INT, merged_pair STRING, pair_count BIGINT, "
+    out = local_frame(
+        spark, rows, "round INT, merged_pair STRING, pair_count BIGINT, "
         "total_tokens_after BIGINT"
     )
     return out.orderBy("round")

@@ -26,11 +26,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.gender import gender_lookup_df, with_gender
 from ..functions.names import with_name_parts
 from ..operators.normalize import explode_multivalue, surrogate_key
-from ..schemas import SHOWS_RAW
+from ..schemas import SHOWS_RAW, STAR_SCHEMA
 from ..sources.csv import read_csv
 from ..sources.ledger import Ledger
 from ..sources.parquet import write_parquet
@@ -38,6 +39,18 @@ from ..sources.parquet import write_parquet
 
 def _ingest_digest(name: str) -> str:
     return hashlib.md5(name.encode()).hexdigest()[:12]
+
+
+# Warehouse tables in FK load order, each read back with its declared
+# columns in write order plus the ``_ingest`` provenance column that
+# ``load`` appends. A pinned schema lets ``table`` plan with no footer-
+# inference job (one per read otherwise).
+WAREHOUSE_SCHEMA = {
+    name: T.StructType(
+        STAR_SCHEMA[name].fields + [T.StructField("_ingest", T.StringType())]
+    )
+    for name in ("shows", "personnel", "movie_crew", "listings")
+}
 
 
 @dataclass
@@ -188,7 +201,7 @@ class NetflixPipeline:
         """T2: write star tables into the ingest's warehouse slice.
         FK load order is irrelevant here (no enforced constraints),
         kept anyway for parity with ``task.py:154-166``."""
-        for table_name in ("shows", "personnel", "movie_crew", "listings"):
+        for table_name in WAREHOUSE_SCHEMA:
             write_parquet(
                 getattr(star, table_name).withColumn("_ingest", F.lit(ingest)),
                 f"{self.warehouse}/{table_name}/{ingest}",
@@ -198,8 +211,11 @@ class NetflixPipeline:
     def table(self, name: str) -> DataFrame:
         """All ingest slices of a star table (recursive read — the
         slice dirs are plain nesting, not partition columns; provenance
-        travels in the ``_ingest`` data column instead)."""
+        travels in the ``_ingest`` data column instead). The schema is
+        pinned (``WAREHOUSE_SCHEMA``), so building the frame launches
+        no Spark job."""
         return (
-            self.spark.read.option("recursiveFileLookup", "true")
+            self.spark.read.schema(WAREHOUSE_SCHEMA[name])
+            .option("recursiveFileLookup", "true")
             .parquet(f"{self.warehouse}/{name}")
         )

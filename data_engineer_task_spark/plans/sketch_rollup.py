@@ -38,6 +38,7 @@ from ..operators.sketch import (
     kmv_sketch,
 )
 from ..sources.ledger import Ledger
+from ..sources.local import local_frame
 
 
 def _slug(name: str) -> str:
@@ -112,9 +113,10 @@ class SketchRollup:
         path = os.path.join(self.state_dir, "config")
         if not self._config_exists(path):
             if stamp:
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [tuple(self._config().values())],
-                    list(self._config().keys()),
+                    "group_cols string, value_col string, k bigint",
                 ).coalesce(1).write.mode("overwrite").parquet(path)
             return
         row = self.spark.read.parquet(path).collect()[0].asDict()

@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import HISTORY
+from .local import local_frame
 
 
 class Ledger:
@@ -49,7 +50,7 @@ class Ledger:
         return df.where(F.col("name") == F.lit(name)).limit(1).count() > 0
 
     def record(self, name: str) -> None:
-        self.spark.createDataFrame([(name,)], HISTORY).coalesce(1).write.mode(
+        local_frame(self.spark, [(name,)], HISTORY).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
 

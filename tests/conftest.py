@@ -24,19 +24,21 @@ SF_CORRECT = f"{TESTDATA}/sf0.01"
 # everything (the full tier stays the pre-commit bar for changes that
 # touch what a slow test pins — curation classify/run parity, the
 # scale-soak machinery, the plan census, the semantic-dedup oracle).
+# Keys are ``module.py::test_name[param]`` — the node id without its
+# directory part — so a same-named test in another module still runs.
 SLOW_TIER: dict[str, str] = {
     # classify()==run() row-parity across the full config grid — the
     # keepbest seam tests cover the same seam in-tier in ~12 s
-    "test_classify_matches_run": "612s: full classify/run config grid",
-    "test_scale_soak_audit_machinery": "198s: soak harness self-test",
+    "test_curation.py::test_classify_matches_run": "612s: full classify/run config grid",
+    "test_scale_patterns.py::test_scale_soak_audit_machinery": "198s: soak harness self-test",
     # this one entry's DuckDB oracle (recursive CC closure over the
     # semantic-dup graph) dominates the parity sweep; the entry itself
     # stays covered by tools/parity01.sh and the driver's own gate
-    "test_query_matches_oracle[embedding_semantic_dedup_survivors]":
+    "test_oracle_parity.py::test_query_matches_oracle[embedding_semantic_dedup_survivors]":
         "172s: recursive-CTE oracle",
     # the every-entry plan census (builds all 250 physical plans); the
     # per-entry plan tests still run in-tier
-    "test_no_cartesian_or_row_udfs_in_any_declared_entry":
+    "test_plans_physical.py::test_no_cartesian_or_row_udfs_in_any_declared_entry":
         "124s: 250-plan census",
 }
 
@@ -45,7 +47,7 @@ def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     for item in items:
-        why = SLOW_TIER.get(item.name)
+        why = SLOW_TIER.get(item.nodeid.rsplit("/", 1)[-1])
         if why:
             item.add_marker(
                 pytest.mark.skip(

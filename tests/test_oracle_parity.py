@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+import duckdb
 import pytest
 
 from data_engineer_task_spark.plans.analytics import ORACLE, QUERIES
@@ -72,3 +73,41 @@ def test_coverage_doc_counts_match_inventory():
     assert int(m.group(2)) == len(QUERIES)
     for name in NO_ORACLE:
         assert name in text, f"no-oracle entry {name} undocumented in COVERAGE.md"
+
+
+def test_revenue_by_nation_rounds_exact_half_cents_like_the_oracle(spark, tmp_path):
+    """A nation's exact revenue can land on a half cent (two do at
+    sf0.01). Summed as doubles, 2.05 + 0.01·(1−0.5) is 2.0549999…, which
+    rounds to 2.05 on either engine; the exact 2.055 rounds half-up to
+    2.06. The entry sums exact 1e-4-unit integers, so both engines see
+    the exact half cent and agree on the rounding."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oracle_harness import _canon
+
+    tables = {
+        "region": pa.table({"r_regionkey": pa.array([0], pa.int32()),
+                            "r_name": ["R"]}),
+        "nation": pa.table({"n_nationkey": pa.array([1, 2], pa.int32()),
+                            "n_name": ["A", "B"],
+                            "n_regionkey": pa.array([0, 0], pa.int32())}),
+        "customer": pa.table({"c_custkey": [10, 20],
+                              "c_nationkey": pa.array([1, 2], pa.int32())}),
+        "orders": pa.table({"o_orderkey": [100, 101, 200],
+                            "o_custkey": [10, 10, 20]}),
+        "lineitem": pa.table({"l_orderkey": [100, 101, 200],
+                              "l_extendedprice": [2.05, 0.01, 0.15],
+                              "l_discount": [0.0, 0.5, 0.5]}),
+    }
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    for name, table in tables.items():
+        pq.write_table(table, f"{sf}/{name}.parquet")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf}/{name}.parquet')")
+    df = QUERIES["revenue_by_nation"](spark, sf)
+    rows = [tuple(r) for r in df.collect()]
+    assert rows == [("A", 2.06, 2), ("B", 0.08, 1)]
+    oracle = con.execute(ORACLE["revenue_by_nation"]).fetchall()
+    assert _canon(rows, df.columns) == _canon(oracle, df.columns)
+    con.close()

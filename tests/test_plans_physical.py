@@ -10,6 +10,9 @@ right.
 from __future__ import annotations
 
 import re
+from pathlib import Path
+
+import pytest
 
 from data_engineer_task_spark.plans.analytics import QUERIES
 from data_engineer_task_spark.plans.audit import unpartitioned_specs
@@ -740,6 +743,52 @@ def test_keep_best_argmax_is_windowed_join(spark):
     plan = _plan(spark, "near_dup_keep_best")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
+    # the driver union-find's labels come back as a local frame
+    assert "ExistingRDD" not in plan
+
+
+def test_local_frame_is_a_jvm_local_scan(spark):
+    """``local_frame`` builds a ``LocalTableScan`` — no Python worker
+    behind it — with the declared schema, and refuses a row that does
+    not fit instead of falling back to a Python-RDD scan."""
+    from data_engineer_task_spark.sources.local import local_frame
+
+    schema = "k string, n bigint, v array<double>"
+    rows = [("a", 1, [1.0, 2.0]), ("b", None, [])]
+    df = local_frame(spark, rows, schema)
+    assert df._jdf.queryExecution().executedPlan().toString().startswith(
+        "LocalTableScan"
+    )
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], df.schema)
+    assert empty.schema == df.schema and empty.count() == 0
+    with pytest.raises((TypeError, ValueError)):
+        local_frame(spark, [("c", "not a number", [])], schema)
+
+
+def test_create_data_frame_only_inside_local_frame():
+    """Every frame the package builds on the driver goes through
+    ``sources/local.py::local_frame``: a raw ``createDataFrame(list)``
+    plans as ``Scan ExistingRDD`` and starts a Python worker per task."""
+    pkg = Path(__file__).resolve().parent.parent / "data_engineer_task_spark"
+    sites = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if "createDataFrame(" in p.read_text()
+    )
+    assert sites == ["sources/local.py"], sites
+
+
+@pytest.mark.parametrize(
+    "name",
+    # a percentile-target table, the power-iteration result row and
+    # the IVF probe table are all built on the driver
+    ["price_histogram_quantiles", "embedding_pca_top_component", "embedding_ivf_topk"],
+)
+def test_driver_built_frames_scan_locally(spark, name):
+    plan = _plan(spark, name)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_token_entropy_is_map_only(spark):
@@ -816,10 +865,11 @@ def test_no_cartesian_or_row_udfs_in_any_declared_entry(spark):
     """Blanket plan audit over the ENTIRE declared inventory: no
     unintended cartesian products (broadcast-scalar piggybacks
     compile to BroadcastNestedLoopJoin, so a CartesianProduct node
-    always means a missing join key) and no row-at-a-time Python
-    UDFs anywhere. Arrow stages (mapInPandas/cogroup kernels) are
-    allowed — they're the sanctioned Python escape hatch — but only
-    in the entries documented to use them. Plans are built, not
+    always means a missing join key), no row-at-a-time Python UDFs
+    and no Python-RDD scans anywhere. Arrow stages (mapInPandas/
+    cogroup kernels) are allowed — they're the sanctioned Python
+    escape hatch — but only in the entries documented to use them.
+    Plans are built, not
     executed, so the sweep stays cheap."""
     arrow_ok = {
         # documented Arrow-kernel entries (dense vector math /
@@ -846,7 +896,14 @@ def test_no_cartesian_or_row_udfs_in_any_declared_entry(spark):
     # BatchEvalPython site (its codegen twin doc_overlap_chunks is
     # the production path)
     udtf_ok = {"doc_fixed_chunks_udtf"}
+    # ``localCheckpoint`` output also plans as ``Scan ExistingRDD``, but
+    # its rows live in the JVM block manager — no Python worker. Only
+    # entries that checkpoint may show the node; shrink-only.
+    checkpoint_ok = {
+        "near_dup_clusters_twophase": "per-round localCheckpoint in _two_phase_cc",
+    }
     offenders = []
+    rdd_scans: set[str] = set()
     window_flags: dict[str, int] = {}
     for name, fn in QUERIES.items():
         try:
@@ -858,6 +915,10 @@ def test_no_cartesian_or_row_udfs_in_any_declared_entry(spark):
             offenders.append((name, "CartesianProduct"))
         if name not in udtf_ok and "BatchEvalPython" in plan:
             offenders.append((name, "BatchEvalPython"))
+        if "ExistingRDD" in plan:
+            rdd_scans.add(name)
+            if name not in checkpoint_ok:
+                offenders.append((name, "ExistingRDD (driver frame not via local_frame)"))
         if name not in arrow_ok and (
             "ArrowEvalPython" in plan
             or "MapInPandas" in plan
@@ -869,6 +930,7 @@ def test_no_cartesian_or_row_udfs_in_any_declared_entry(spark):
         if n_unpart:
             window_flags[name] = n_unpart
     assert not offenders, offenders
+    assert not set(checkpoint_ok) - rdd_scans, "shrink checkpoint_ok"
 
     # Unpartitioned-window gate (VERDICT r4 item 5): a window with no
     # partition spec moves ALL its input to one task. Allowed ONLY

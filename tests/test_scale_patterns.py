@@ -1306,6 +1306,25 @@ def test_pq_fit_joint_pass_matches_per_subspace_kmeans(spark):
         assert joint == seq, (m, k, n_iters, rt)
 
 
+
+def test_pq_fit_releases_its_cache_on_error(spark):
+    """pq_fit persists its (id, vector) projection for the Lloyd loop.
+    Both argument errors must unpersist it again, or a cached copy of
+    the corpus outlives the failed call for the whole session."""
+    import pytest
+
+    from data_engineer_task_spark.operators.similarity import pq_fit
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="need >= 4 vectors"):
+        pq_fit(emb.orderBy("vec_id").limit(3), "vec_id", "embedding", m=4, k=4)
+    assert cache.isEmpty()
+    with pytest.raises(ValueError, match="not divisible by m=5"):
+        pq_fit(emb, "vec_id", "embedding", m=5, k=4)
+    assert cache.isEmpty()
+
 def test_pq_encode_deterministic_and_compresses(spark):
     """PQ contract: (a) encode is a pure function of (vectors,
     codebooks) — two passes produce identical codes (quantized-d2
