@@ -101,13 +101,16 @@ def with_gender(
 ) -> DataFrame:
     """Broadcast-join gender onto ``df``; unmatched → 'unknown'.
 
-    The lookup's value column is renamed to a reserved temp name before
-    the join, so the output carries EXACTLY one new column
-    (``gender_col``) — no raw 'gender' leak when ``gender_col`` is
-    customized, no AMBIGUOUS_REFERENCE when ``df`` already has one."""
-    keyed = df.withColumn("_name_key", F.lower(F.col(first_name_col)))
-    lk = lookup.select("_name_key", F.col("gender").alias("_lk_gender"))
-    joined = keyed.join(F.broadcast(lk), "_name_key", "left")
-    return joined.withColumn(
-        gender_col, F.coalesce(F.col("_lk_gender"), F.lit("unknown"))
-    ).drop("_name_key", "_lk_gender")
+    The join is on ``lower(first_name)`` and the lookup's columns are
+    referenced through the lookup frame, so the output carries EXACTLY
+    ``df``'s columns plus ``gender_col`` (replaced in place if ``df``
+    already has it) — no lookup column leaks, and no
+    AMBIGUOUS_REFERENCE when ``df`` already has a 'gender'."""
+    joined = df.join(
+        F.broadcast(lookup),
+        F.lower(df[first_name_col]) == lookup["_name_key"],
+        "left",
+    )
+    gender = F.coalesce(lookup["gender"], F.lit("unknown")).alias(gender_col)
+    cols = [gender if c == gender_col else df[c] for c in df.columns]
+    return joined.select(*cols, *([] if gender_col in df.columns else [gender]))

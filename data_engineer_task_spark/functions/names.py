@@ -26,6 +26,9 @@ def with_name_parts(
     # F.get (not []) — ANSI mode (Spark 4 default) raises on an
     # out-of-bounds index; single-token names have no element 1.
     parts = F.split(F.col(name_col), " ", 2)
-    return df.withColumn(first_col, F.initcap(F.get(parts, 0))).withColumn(
-        last_col, F.coalesce(F.get(parts, 1), F.lit(""))
+    return df.withColumns(
+        {
+            first_col: F.initcap(F.get(parts, 0)),
+            last_col: F.coalesce(F.get(parts, 1), F.lit("")),
+        }
     )

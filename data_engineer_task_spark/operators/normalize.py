@@ -35,10 +35,16 @@ def explode_multivalue(
     element = F.explode_outer if keep_null_rows else F.explode
     # \Q…\E: F.split takes a regex; a raw '|' or '.' separator would
     # otherwise split per character (see operators/text.py::tokenize)
-    exploded = element(F.split(F.col(col), f"\\Q{sep}\\E")).alias("__elem")
-    value = F.trim(F.col("__elem")) if trim else F.col("__elem")
+    exploded = element(F.split(F.col(col), f"\\Q{sep}\\E"))
     others = [c for c in df.columns if c != col]
-    return df.select(*others, exploded).withColumn(out_col, value).drop("__elem")
+    if trim:
+        # a generator cannot sit inside trim(): explode, then trim
+        df, value = df.select(*others, exploded.alias("__elem")), F.trim("__elem")
+    else:
+        value = exploded
+    # out_col replaces a same-named column in place, else goes last
+    cols = [value.alias(out_col) if c == out_col else c for c in others]
+    return df.select(*cols, *([] if out_col in others else [value.alias(out_col)]))
 
 
 def surrogate_key(

@@ -22,7 +22,7 @@ Faithful quirks preserved (golden numbers depend on them, SURVEY §2.2):
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +59,9 @@ class StarSchema:
     personnel: DataFrame
     movie_crew: DataFrame
     listings: DataFrame
+    # the (show_id, name, personnel_type) pairs movie_crew resolves its
+    # ids from — an intermediate, not a warehouse table
+    crew: DataFrame
 
 
 def extract(spark: SparkSession, path: str) -> DataFrame:
@@ -75,43 +78,43 @@ def _crew_pairs(raw: DataFrame, col: str, personnel_type: str) -> DataFrame:
     T6/T8/T9/T17 + constant column (``task.py:76-87,110-119``): split,
     explode, trim, drop nulls, tag with the crew type.
     """
-    return (
-        explode_multivalue(
-            raw.select("show_id", col), col, trim=True, keep_null_rows=False, out_col="name"
-        )
-        .where(F.col("name").isNotNull())
-        .withColumn("personnel_type", F.lit(personnel_type))
-        .select("show_id", "name", "personnel_type")
+    return explode_multivalue(
+        raw.select("show_id", col), col, trim=True, keep_null_rows=False, out_col="name"
+    ).where(F.col("name").isNotNull()).select(
+        "show_id", "name", F.lit(personnel_type).alias("personnel_type")
+    )
+
+
+def resolve_crew_ids(crew: DataFrame, personnel: DataFrame) -> DataFrame:
+    """movie_crew bridge: crew pairs with each name resolved to its
+    personnel id (T18 — inner join ≡ the reference's left-join-then-
+    dropna, since every crew name exists in personnel by construction).
+
+    No broadcast hint: the dimension grows with the catalog, so Spark
+    sizes the join from ``personnel``'s statistics. ``run`` passes the
+    personnel slice it has just written, whose file size makes this a
+    broadcast hash join while the slice is small and a sort-merge join
+    once it is not."""
+    return crew.join(personnel.select("id", "name"), "name").select(
+        F.col("id").alias("personnel_id"), "show_id", "personnel_type"
     )
 
 
 def transform(raw: DataFrame, gender_lookup: DataFrame) -> StarSchema:
     """T6-T18: raw 12-col frame → 4-table star schema (``task.py:74-139``)."""
-    spark_cast = _crew_pairs(raw, "cast", "cast")
-    spark_dir = _crew_pairs(raw, "director", "director")
+    # cast ⧺ director (T11)
+    crew = _crew_pairs(raw, "cast", "cast").union(
+        _crew_pairs(raw, "director", "director")
+    )
 
     # personnel: distinct names across both roles (T10-T12), surrogate
     # key (T13/D2), first-space name split (T14/T15), gender (T16/D6).
-    names = (
-        spark_cast.select("name")
-        .union(spark_dir.select("name"))
-        .where(F.col("name").isNotNull())
-        .distinct()
-    )
     personnel = with_gender(
-        with_name_parts(surrogate_key(names, order_by=["name"], key_col="id")),
+        with_name_parts(
+            surrogate_key(crew.select("name").distinct(), order_by=["name"], key_col="id")
+        ),
         gender_lookup,
     ).select("id", "name", "first_name", "last_name", "gender")
-
-    # movie_crew bridge: union cast⧺director (T11), resolve name→id
-    # (T18 — inner join ≡ the reference's left-join-then-dropna since
-    # every crew name exists in personnel by construction). personnel
-    # is small → broadcast; at 100 TB of facts this stays a map-side join.
-    movie_crew = (
-        spark_cast.union(spark_dir)
-        .join(F.broadcast(personnel.select("id", "name")), "name", "inner")
-        .select(F.col("id").alias("personnel_id"), "show_id", "personnel_type")
-    )
 
     # listings: exploded but NOT trimmed — faithful quirk D1.
     listings = explode_multivalue(
@@ -120,7 +123,7 @@ def transform(raw: DataFrame, gender_lookup: DataFrame) -> StarSchema:
         trim=False,
         keep_null_rows=False,
         out_col="listing",
-    ).where(F.col("listing").isNotNull()).select("show_id", "listing")
+    ).where(F.col("listing").isNotNull())
 
     # shows: parse date_added (T7 — trim handles the 88 leading-space
     # rows [verified]); drop the multi-valued source columns (ref
@@ -143,7 +146,13 @@ def transform(raw: DataFrame, gender_lookup: DataFrame) -> StarSchema:
         "description",
     )
 
-    return StarSchema(shows=shows, personnel=personnel, movie_crew=movie_crew, listings=listings)
+    return StarSchema(
+        shows=shows,
+        personnel=personnel,
+        movie_crew=resolve_crew_ids(crew, personnel),
+        listings=listings,
+        crew=crew,
+    )
 
 
 class NetflixPipeline:
@@ -175,38 +184,64 @@ class NetflixPipeline:
         keying would silently skip a different file that happens to
         share a name."""
         name = csv_path
-        if not force and self.ledger.seen(name):
+        seen = self.ledger.seen(name)  # ONE ledger lookup per run
+        if seen and not force:
             return None  # already ingested — idempotency (ref task.py:289)
+        # raw feeds all four tables — cache it so the four write
+        # actions don't re-parse the CSV (lazy plans re-execute per
+        # action otherwise).
         raw = extract(self.spark, csv_path).persist()
-        star = transform(raw, gender_lookup_df(self.spark))
-        # personnel feeds its own write AND the movie_crew broadcast;
-        # raw feeds all four tables — cache both so the four write
-        # actions don't re-parse the CSV and re-sort the names per
-        # table (lazy plans re-execute per action otherwise).
-        star.personnel.persist()
         try:
-            self.load(star, ingest=_ingest_digest(name))
+            star = self.load(
+                transform(raw, gender_lookup_df(self.spark)),
+                ingest=_ingest_digest(name),
+            )
             # Record only AFTER a successful load — the reference
             # inserts during the pre-check (task.py:239), which poisons
             # the ledger when a later stage fails and makes retries
             # silently no-op.
-            if not self.ledger.seen(name):
+            if not seen:  # forced re-ingests stay single in the ledger
                 self.ledger.record(name)
         finally:
-            star.personnel.unpersist(False)
             raw.unpersist(False)
         return star
 
-    def load(self, star: StarSchema, *, ingest: str) -> None:
-        """T2: write star tables into the ingest's warehouse slice.
-        FK load order is irrelevant here (no enforced constraints),
-        kept anyway for parity with ``task.py:154-166``."""
-        for table_name in WAREHOUSE_SCHEMA:
+    def load(self, star: StarSchema, *, ingest: str) -> StarSchema:
+        """T2: write star tables into the ingest's warehouse slice, in
+        FK load order (``task.py:154-166``). movie_crew resolves its ids
+        against the personnel slice just written, read back with the
+        pinned schema: the dimension is computed once, by its own write,
+        and never cached for its foreign-key consumer. Returns the star
+        as written."""
+
+        def slice_dir(table_name: str) -> str:
+            return f"{self.warehouse}/{table_name}/{ingest}"
+
+        def write(table_name: str, df: DataFrame) -> None:
             write_parquet(
-                getattr(star, table_name).withColumn("_ingest", F.lit(ingest)),
-                f"{self.warehouse}/{table_name}/{ingest}",
+                df.withColumn("_ingest", F.lit(ingest)),
+                slice_dir(table_name),
                 mode="overwrite",
             )
+
+        write("shows", star.shows)
+        write("personnel", star.personnel)
+        star = replace(
+            star,
+            movie_crew=resolve_crew_ids(
+                star.crew, self._read("personnel", slice_dir("personnel"))
+            ),
+        )
+        write("movie_crew", star.movie_crew)
+        write("listings", star.listings)
+        return star
+
+    def _read(self, name: str, path: str) -> DataFrame:
+        return (
+            self.spark.read.schema(WAREHOUSE_SCHEMA[name])
+            .option("recursiveFileLookup", "true")
+            .parquet(path)
+        )
 
     def table(self, name: str) -> DataFrame:
         """All ingest slices of a star table (recursive read — the
@@ -214,8 +249,4 @@ class NetflixPipeline:
         travels in the ``_ingest`` data column instead). The schema is
         pinned (``WAREHOUSE_SCHEMA``), so building the frame launches
         no Spark job."""
-        return (
-            self.spark.read.schema(WAREHOUSE_SCHEMA[name])
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{self.warehouse}/{name}")
-        )
+        return self._read(name, f"{self.warehouse}/{name}")

@@ -16,19 +16,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import anti_join, semi_join, top_k, yoy_growth
+from ..operators.relational import top_k, yoy_growth
 
 
 def shows_without_crew(shows: DataFrame, movie_crew: DataFrame) -> DataFrame:
-    """Q1 ``query4_1_1``: shows with no crew at all. [verified] = 299."""
-    return anti_join(shows, movie_crew, "show_id").agg(
+    """Q1 ``query4_1_1``: shows with no crew at all. [verified] = 299.
+
+    A plain ``left_anti`` on the key, as the SQL twin: de-duplicating
+    the right side first (``operators.anti_join``) only adds an
+    aggregate and a shuffle stage ahead of the broadcast."""
+    return shows.join(movie_crew.select("show_id"), "show_id", "left_anti").agg(
         F.count(F.lit(1)).alias("n_shows_no_crew")
     )
 
 
 def shows_without_listings(shows: DataFrame, listings: DataFrame) -> DataFrame:
-    """Q2 ``query4_1_2``: shows with no genre listing. [verified] = 0."""
-    return anti_join(shows, listings, "show_id").agg(
+    """Q2 ``query4_1_2``: shows with no genre listing. [verified] = 0.
+    Same plain ``left_anti`` shape as Q1."""
+    return shows.join(listings.select("show_id"), "show_id", "left_anti").agg(
         F.count(F.lit(1)).alias("n_shows_no_listing")
     )
 
@@ -89,17 +94,22 @@ def best_tv_show_growth_year(shows: DataFrame) -> DataFrame:
     )
 
 
+def _person_show_ids(
+    personnel: DataFrame, movie_crew: DataFrame, person_name: str
+) -> DataFrame:
+    """show_id of every crew row of the named person (repeats kept)."""
+    person = personnel.where(F.col("name") == person_name).select("id")
+    return movie_crew.join(
+        F.broadcast(person), movie_crew["personnel_id"] == person["id"]
+    ).select("show_id")
+
+
 def shows_featuring(
     personnel: DataFrame, movie_crew: DataFrame, person_name: str
 ) -> DataFrame:
     """Q9 ``query5_5_1``: show_ids featuring a named person.
     [verified] 12 shows for 'Woody Harrelson'."""
-    person = personnel.where(F.col("name") == person_name).select("id")
-    return (
-        movie_crew.join(F.broadcast(person), movie_crew["personnel_id"] == person["id"])
-        .select("show_id")
-        .distinct()
-    )
+    return _person_show_ids(personnel, movie_crew, person_name).distinct()
 
 
 def frequent_costars(
@@ -113,14 +123,21 @@ def frequent_costars(
     the named person's shows. Faithful quirks kept (SURVEY §2.3 Q10): no
     personnel_type filter (directors count), 'unknown' included. The
     reference's two-query IN-list splice + Python HAVING (``task.py:
-    222-225``) is one semi-join + HAVING here (D5)."""
-    cohort_shows = shows_featuring(personnel, movie_crew, person_name)
+    222-225``) is one semi-join + HAVING here (D5).
+
+    The cohort (one person's shows) is bounded by that person, not by
+    the corpus, so it is broadcast as is — no ``distinct`` (a semi join
+    ignores repeats), and no hash shuffle of all of movie_crew for a
+    sort-merge join. The HAVING output is small and sorted in one
+    partition: no range-partitioner sampling job, no shuffle."""
+    cohort_shows = _person_show_ids(personnel, movie_crew, person_name)
     return (
-        semi_join(movie_crew, cohort_shows, "show_id")
+        movie_crew.join(F.broadcast(cohort_shows), "show_id", "left_semi")
         .join(personnel, movie_crew["personnel_id"] == personnel["id"])
         .where(F.col("gender").isin(*genders) & (F.col("name") != person_name))
         .groupBy("name")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") >= min_shows)
+        .coalesce(1)
         .orderBy(F.desc_nulls_last("n"), F.asc("name"))
     )

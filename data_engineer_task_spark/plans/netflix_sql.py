@@ -1,7 +1,12 @@
 """The reference's 10-query workload as Spark-SQL TEXT — the
 ``spark.sql`` twin of the DataFrame forms in ``netflix_queries.py``
 (SURVEY §3.2: each query exists in both surfaces; both compile to the
-same Catalyst plans).
+same Catalyst plans — ``frequent_costars`` carries the DataFrame form's
+broadcast and single-partition sort as ``BROADCAST``/``COALESCE``
+hints). ``tests/test_netflix.py::test_sql_twins_match_on_tiny_catalog``
+checks that every twin returns its DataFrame form's rows, and
+``test_frequent_costars_plans_broadcast_and_sort_in_one_partition``
+pins both forms' plan shape.
 
 Differences from the reference SQL (``queries.py:40-121``) carried
 over identically from the DataFrame forms: explicit NULLS LAST (D3),
@@ -74,15 +79,15 @@ NETFLIX_SQL: dict[str, str] = {
     """,
     "frequent_costars": """
         WITH cohort AS (
-          SELECT DISTINCT mc.show_id
+          SELECT /*+ BROADCAST(p) */ mc.show_id
           FROM movie_crew mc JOIN personnel p ON mc.personnel_id = p.id
           WHERE p.name = :name
         ),
         in_cohort AS (
-          SELECT mc.* FROM movie_crew mc
+          SELECT /*+ BROADCAST(c) */ mc.* FROM movie_crew mc
           LEFT SEMI JOIN cohort c ON mc.show_id = c.show_id
         )
-        SELECT p.name AS name, count(*) AS n
+        SELECT /*+ COALESCE(1) */ p.name AS name, count(*) AS n
         FROM in_cohort mc JOIN personnel p ON mc.personnel_id = p.id
         WHERE array_contains(:genders, p.gender) AND p.name <> :name
         GROUP BY p.name

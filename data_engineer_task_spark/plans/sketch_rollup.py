@@ -24,6 +24,7 @@ normal path), a replayed shard is skipped by the ledger, and
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,8 +38,7 @@ from ..operators.sketch import (
     kmv_merge,
     kmv_sketch,
 )
-from ..sources.ledger import Ledger
-from ..sources.local import local_frame
+from ..sources.ledger import Ledger, read_marker, write_marker
 
 
 def _slug(name: str) -> str:
@@ -53,7 +53,8 @@ class SketchRollup:
 
     - ``state_dir/hll/<slug>/``  — (group…, reg, mr) register table
     - ``state_dir/kmv/<slug>/``  — (group…, h) k-minimum hash set
-    - ``state_dir/ledger/``      — shard names already folded
+    - ``state_dir/ledger/``      — shard names already folded (markers)
+    - ``state_dir/config``       — the configuration stamp (a marker)
 
     ``group_cols``/``value_col``/``k`` are fixed per rollup (state
     from different configurations must not fold together, so they are
@@ -80,8 +81,15 @@ class SketchRollup:
     # a register row MEANS; different k changes the KMV contract), so
     # the first ingest stamps the configuration into the state dir and
     # every later ingest/estimate validates against it. Stored as a
-    # one-row parquet (scheme-generic — works wherever the state
-    # lives), mirroring the ledger's storage discipline.
+    # JSON marker through the ledger's Hadoop-FS helpers (any scheme,
+    # no Spark job). Only a MISSING marker counts as first use; a read
+    # failure on an existing one raises — failing open would skip the
+    # very validation this marker exists for. The stamp never
+    # overwrites: of two concurrent FIRST ingests, the second stamp
+    # raises FileExistsError instead of silently relabeling the first
+    # shard's state. State from the older parquet format (a ``config``
+    # directory, a parquet ledger) is not read: rebuild it in a fresh
+    # state dir (an ingest into it fails its stamp the same way).
 
     def _config(self) -> dict:
         return {
@@ -90,38 +98,16 @@ class SketchRollup:
             "k": self.k,
         }
 
-    def _config_exists(self, path: str) -> bool:
-        """Driver-side FS existence check via the Hadoop API (any
-        scheme the session can read — the Ledger._exists discipline).
-        A READ failure on an EXISTING marker must fail loudly, never
-        count as 'first use': failing open would skip the very
-        validation this marker exists for (code-review r7)."""
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        return bool(fs.exists(hpath))
-
     def _check_or_stamp_config(self, *, stamp: bool) -> None:
-        # Concurrency note (same class as sources/ledger.py): the
-        # marker is check-then-write without a transaction, so two
-        # concurrent FIRST ingests with different configs can both see
-        # "no marker", both stamp, and both proceed — last stamp wins
-        # and the earlier shard's state is mis-labeled. Exactly-once
-        # stamping needs a transactional table format (Delta/Iceberg —
-        # not in this image); single-writer ingest is the contract,
-        # as it is for the ledger (ADVICE r7).
         path = os.path.join(self.state_dir, "config")
-        if not self._config_exists(path):
-            if stamp:
-                local_frame(
-                    self.spark,
-                    [tuple(self._config().values())],
-                    "group_cols string, value_col string, k bigint",
-                ).coalesce(1).write.mode("overwrite").parquet(path)
-            return
-        row = self.spark.read.parquet(path).collect()[0].asDict()
         mine = self._config()
-        if {k: row[k] for k in mine} != mine:
+        stored = read_marker(self.spark, path)
+        if stored is None:
+            if stamp:
+                write_marker(self.spark, path, json.dumps(mine))
+            return
+        row = json.loads(stored)
+        if row != mine:
             raise ValueError(
                 f"sketch state at {self.state_dir} was built with "
                 f"{row}, not {mine} — refusing to fold incompatible "

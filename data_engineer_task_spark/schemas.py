@@ -80,14 +80,11 @@ LISTINGS = T.StructType(
     ]
 )
 
-HISTORY = T.StructType([T.StructField("name", T.StringType(), False)])
-
 STAR_SCHEMA = {
     "shows": SHOWS,
     "personnel": PERSONNEL,
     "movie_crew": MOVIE_CREW,
     "listings": LISTINGS,
-    "history": HISTORY,
 }
 
 # ---------------------------------------------------------------------------

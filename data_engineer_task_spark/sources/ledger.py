@@ -2,57 +2,95 @@
 
 The reference keeps a one-column Postgres table ``history(name)`` and
 does a point lookup before ETL, building SQL with ``str.format``
-(injection-prone, ``queries.py:36-38``). Here: a small parquet append
-table + a parameterized filter — no SQL string splicing.
+(injection-prone, ``queries.py:36-38``). Here: one marker object per
+recorded name, ``<ledger dir>/<sha256 of the name>`` holding the name,
+written and probed through the Hadoop FileSystem API (any scheme the
+session can read: file://, hdfs://, s3a://). ``seen`` is one ``exists``
+call and ``record`` one ``create`` — the point lookup again, O(1) per
+check however many ingests the ledger holds, and no Spark job for
+either. A name string never reaches a path or a query unhashed.
 
-Concurrency note: parquet append is not transactional; two concurrent
-pipelines could both pass the check. The reference has the same race
-(check-then-insert without a transaction). For exactly-once at scale
-this would sit on a transactional table format (Delta/Iceberg —
-not in this image, stubbed at the format layer) — the API here stays.
+Legacy format: ledgers written as a parquet table of names (before the
+marker format) are not read. A file recorded there is re-ingested once;
+that re-ingest overwrites its own warehouse slice by design
+(``NetflixPipeline.run``), so nothing is duplicated.
+
+Concurrency note: ``record`` creates its marker with
+``overwrite=false``, so a second record of the same name raises
+``FileExistsError`` instead of silently recording it twice. Two
+concurrent pipelines can still both pass ``seen`` and both run the
+ETL (check-then-insert, the reference's race too); the loser's record
+then fails loudly. The create is atomic where the filesystem makes
+create-if-absent atomic (HDFS); the local filesystem checks then opens,
+so two creators racing inside that window can both succeed. The same
+marker helpers stamp ``SketchRollup``'s configuration.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+import hashlib
 
-from ..schemas import HISTORY
-from .local import local_frame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — driver-side, no job."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _java_error(e: Py4JJavaError, class_name: str) -> bool:
+    return e.java_exception.getClass().getName() == class_name
+
+
+def read_marker(spark: SparkSession, path: str) -> str | None:
+    """The text of the marker at ``path``, or None when there is none."""
+    fs, hpath = _fs_path(spark, path)
+    try:
+        stream = fs.open(hpath)
+    except Py4JJavaError as e:
+        if _java_error(e, "java.io.FileNotFoundException"):
+            return None
+        raise
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
+
+
+def write_marker(spark: SparkSession, path: str, text: str) -> None:
+    """Create the marker at ``path`` holding ``text``; raises
+    ``FileExistsError`` if one is already there (never overwrites)."""
+    fs, hpath = _fs_path(spark, path)
+    try:
+        out = fs.create(hpath, False)
+    except Py4JJavaError as e:
+        if _java_error(e, "org.apache.hadoop.fs.FileAlreadyExistsException"):
+            raise FileExistsError(f"marker already exists: {path}") from None
+        raise
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
 
 
 class Ledger:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        self.path = path.rstrip("/")
 
-    def _exists(self) -> bool:
-        """One driver-side FS check, not a Spark job — via the Hadoop
-        FileSystem API so any scheme the session can read works
-        (file://, hdfs://, s3a://); an os.listdir here would silently
-        report 'never seen' for every remote ledger and re-run every
-        pipeline."""
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        for status in fs.listStatus(hpath):
-            if status.getPath().getName().endswith(".parquet"):
-                return True
-        return False
+    def _marker(self, name: str) -> str:
+        return f"{self.path}/{hashlib.sha256(name.encode()).hexdigest()}"
 
     def seen(self, name: str) -> bool:
-        if not self._exists():
-            return False
-        df = self.spark.read.schema(HISTORY).parquet(self.path)
-        return df.where(F.col("name") == F.lit(name)).limit(1).count() > 0
+        fs, hpath = _fs_path(self.spark, self._marker(name))
+        return bool(fs.exists(hpath))
 
     def record(self, name: str) -> None:
-        local_frame(self.spark, [(name,)], HISTORY).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        """Record ``name``; raises ``FileExistsError`` if it already is."""
+        write_marker(self.spark, self._marker(name), name)
 
     def check_and_record(self, name: str) -> bool:
         """True if already seen (skip ETL); else records and returns False."""

@@ -63,6 +63,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def in_job_group(spark):
+    """``in_job_group(fn)`` -> (fn(), ids of the Spark jobs fn launched),
+    counted through a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, set(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def netflix_csv() -> str:
     if not os.path.exists(NETFLIX_CSV):
         pytest.skip("reference CSV not present")

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from data_engineer_task_spark.functions.gender import gender_lookup_df
 from data_engineer_task_spark.plans import netflix_queries as q
-from data_engineer_task_spark.plans.netflix import extract, transform
+from data_engineer_task_spark.plans.netflix import WAREHOUSE_SCHEMA, extract, transform
 
 
 @pytest.fixture(scope="module")
@@ -268,30 +268,65 @@ _TINY_CATALOG = [
 ]
 
 # Jobs one NetflixPipeline.run launches on the catalog above (measured
-# at 4 and 8 cores; the five writes — four star tables and the ledger
-# row — and the AQE query stages that feed them). SHRINK-ONLY — lower
-# it when a change saves a job; raising it needs the new job named and
+# at 4 and 8 cores; the four star-table writes and the AQE query stages
+# that feed them — the ledger launches none). SHRINK-ONLY — lower it
+# when a change saves a job; raising it needs the new job named and
 # justified here.
-RUN_JOB_BUDGET = 10
+RUN_JOB_BUDGET = 8
 
+# The ten read-backs (``task.py:181-227``) on the tiny warehouse: the
+# rows each must return (derived by hand from _TINY_CATALOG, ids by
+# name: Ann Lee 1, Bob Stone 2, Cher 3, Emma Stone 4, Woody Harrelson
+# 5; snapshot genders: ann/cher/emma female, bob/woody male) and the
+# Spark jobs it may launch (measured at 4 and 8 cores, SHRINK-ONLY like
+# RUN_JOB_BUDGET). The three most_common_first_name genders count as
+# three of the ten.
+_PERSON = "Woody Harrelson"
+READBACKS = {
+    # s3 alone has neither cast nor director
+    "shows_without_crew": (
+        lambda t: q.shows_without_crew(t("shows"), t("movie_crew")), [(1,)], 3),
+    "shows_without_listings": (
+        lambda t: q.shows_without_listings(t("shows"), t("listings")), [(0,)], 3),
+    # cast rows: Cher 1, Woody 2, Emma 2 (duplicated in s2), Ann 1
+    "most_common_first_name[female]": (
+        lambda t: q.most_common_first_name(t("personnel"), t("movie_crew"), "female"),
+        [("Emma", 2)], 3),
+    "most_common_first_name[male]": (
+        lambda t: q.most_common_first_name(t("personnel"), t("movie_crew"), "male"),
+        [("Woody", 2)], 3),
+    "most_common_first_name[unknown]": (
+        lambda t: q.most_common_first_name(t("personnel"), t("movie_crew"), "unknown"),
+        [], 1),
+    # every dated show has gap 1; s3 (no date) sorts last; title breaks the tie
+    "longest_addition_gap": (
+        lambda t: q.longest_addition_gap(t("shows")), [("Fourth", 1)], 1),
+    "busiest_month": (lambda t: q.busiest_month(t("shows")), [("August", 2)], 2),
+    # TV shows released 2001 and 2016: no consecutive years, no growth row
+    "best_tv_show_growth_year": (
+        lambda t: q.best_tv_show_growth_year(t("shows")), [], 3),
+    "shows_featuring": (
+        lambda t: q.shows_featuring(t("personnel"), t("movie_crew"), _PERSON),
+        [("s1",), ("s2",)], 3),
+    # s1 + s2 crew minus Woody: Cher 1, Ann Lee 1, Bob Stone 1 (male),
+    # Emma Stone 2 — the duplicated cast row counts twice
+    "frequent_costars": (
+        lambda t: q.frequent_costars(t("personnel"), t("movie_crew"), _PERSON),
+        [("Emma Stone", 2)], 5),
+}
 
-def _in_job_group(spark, fn):
-    """(fn(), ids of the Spark jobs fn launched), via a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, set(sc.statusTracker().getJobIdsForGroup(group))
+# The SQL twin of each read-back: (query name, binds).
+_SQL_TWINS = {
+    "most_common_first_name[female]": ("most_common_first_name", {"gender": "female"}),
+    "most_common_first_name[male]": ("most_common_first_name", {"gender": "male"}),
+    "most_common_first_name[unknown]": ("most_common_first_name", {"gender": "unknown"}),
+    "shows_featuring": ("shows_featuring", {"name": _PERSON}),
+    "frequent_costars": ("frequent_costars", {"name": _PERSON}),
+}
 
 
 @pytest.fixture(scope="module")
-def tiny_run(spark, tmp_path_factory):
+def tiny_run(spark, tmp_path_factory, in_job_group):
     """One pipeline run over the tiny catalog: (pipe, job ids of run)."""
     import csv
 
@@ -305,9 +340,21 @@ def tiny_run(spark, tmp_path_factory):
         w.writerow(SHOWS_RAW.names)
         w.writerows(_TINY_CATALOG)
     pipe = NetflixPipeline(spark, str(d / "wh"))
-    star, jobs = _in_job_group(spark, lambda: pipe.run(path))
+    star, jobs = in_job_group(lambda: pipe.run(path))
     assert star is not None
     return pipe, jobs
+
+
+def _run_plans(spark, jobs) -> list[str]:
+    """Physical plan text of every SQL execution that ran one of ``jobs``."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size()):
+        ex = executions.apply(i)
+        ex_jobs = ex.jobs().keySet().toSeq()
+        if any(ex_jobs.apply(j) in jobs for j in range(ex_jobs.size())):
+            plans.append(ex.physicalPlanDescription())
+    return plans
 
 
 def test_run_stays_within_job_budget(tiny_run):
@@ -321,26 +368,34 @@ def test_run_plans_have_no_python_rdd_scan(spark, tiny_run):
     ExistingRDD`` and starts a Python worker per task
     (``sources/local.py``)."""
     _, jobs = tiny_run
-    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = []
-    for i in range(executions.size()):
-        ex = executions.apply(i)
-        ex_jobs = ex.jobs().keySet().toSeq()
-        if any(ex_jobs.apply(j) in jobs for j in range(ex_jobs.size())):
-            plans.append(ex.physicalPlanDescription())
-    assert len(plans) >= 5  # four star-table writes and the ledger append
+    plans = _run_plans(spark, jobs)
+    assert len(plans) >= 4  # the four star-table writes
     assert not [p for p in plans if "ExistingRDD" in p]
 
 
-def test_table_reads_launch_no_jobs_and_match_the_written_schema(spark, tiny_run):
+def test_run_caches_only_the_raw_catalog(spark, tiny_run):
+    """movie_crew resolves its ids against the personnel slice just
+    written, so the only cached frame ``run`` reads is the parsed CSV:
+    no InMemoryRelation of personnel (or of anything else)."""
+    import re
+
+    _, jobs = tiny_run
+    cached = [
+        args
+        for p in _run_plans(spark, jobs)
+        for args in re.findall(r"\(\d+\) InMemoryRelation\nArguments: \[([^\]]*)\]", p)
+    ]
+    assert cached, "the raw catalog is cached for the four writes"
+    assert all("listed_in" in a and "first_name" not in a for a in cached), cached
+
+
+def test_table_reads_launch_no_jobs_and_match_the_written_schema(spark, tiny_run, in_job_group):
     """``table`` reads with the declared schema, so building the frame
     runs no footer-inference job; the pinned schema must be exactly
     what ``load`` wrote (names, order and types)."""
-    from data_engineer_task_spark.plans.netflix import WAREHOUSE_SCHEMA
-
     pipe, _ = tiny_run
-    frames, jobs = _in_job_group(
-        spark, lambda: {name: pipe.table(name) for name in WAREHOUSE_SCHEMA}
+    frames, jobs = in_job_group(
+        lambda: {name: pipe.table(name) for name in WAREHOUSE_SCHEMA}
     )
     assert jobs == set()
     for name, df in frames.items():
@@ -354,3 +409,57 @@ def test_table_reads_launch_no_jobs_and_match_the_written_schema(spark, tiny_run
     assert frames["shows"].count() == len(_TINY_CATALOG)
     assert frames["listings"].count() == 6
     assert frames["movie_crew"].count() == 9  # incl. the duplicated cast row
+
+
+def _rows(rows) -> list[tuple]:
+    # sorted: shows_featuring is a set; every ordered answer here has one row
+    return sorted(tuple(r) for r in rows)
+
+
+@pytest.mark.parametrize("name", list(READBACKS))
+def test_readback_answers_within_job_budget(tiny_run, in_job_group, name):
+    """Hand-derived answers for the ten analytics on the tiny warehouse
+    (the golden tests above skip without the reference CSV), each
+    within its shrink-only job budget."""
+    pipe, _ = tiny_run
+    build, want, budget = READBACKS[name]
+    rows, jobs = in_job_group(lambda: build(pipe.table).collect())
+    assert _rows(rows) == want
+    assert 0 < len(jobs) <= budget, sorted(jobs)
+
+
+def test_sql_twins_match_on_tiny_catalog(spark, tiny_run):
+    """The SQL text and the DataFrame form of every read-back return the
+    same rows on the tiny warehouse (no reference CSV needed)."""
+    from types import SimpleNamespace
+
+    from data_engineer_task_spark.plans.netflix_sql import register_star, run_sql
+
+    pipe, _ = tiny_run
+    register_star(SimpleNamespace(**{n: pipe.table(n) for n in WAREHOUSE_SCHEMA}))
+    for name, (build, want, _) in READBACKS.items():
+        query, binds = _SQL_TWINS.get(name, (name, {}))
+        got = _rows(run_sql(spark, query, **binds).collect())
+        assert got == _rows(build(pipe.table).collect()) == want, name
+
+
+def test_frequent_costars_plans_broadcast_and_sort_in_one_partition(spark, tiny_run):
+    """The cohort is broadcast (no hash shuffle of movie_crew for a
+    sort-merge semi join) and the HAVING output is sorted in one
+    partition (no range-partitioning sample job) — in the DataFrame
+    form and in its SQL twin, initial and final AQE plans alike."""
+    from types import SimpleNamespace
+
+    from data_engineer_task_spark.plans.netflix_sql import register_star, run_sql
+
+    pipe, _ = tiny_run
+    t = pipe.table
+    register_star(SimpleNamespace(**{n: t(n) for n in WAREHOUSE_SCHEMA}))
+    for df in (
+        q.frequent_costars(t("personnel"), t("movie_crew"), _PERSON),
+        run_sql(spark, "frequent_costars", name=_PERSON),
+    ):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" in plan and "SortMergeJoin" not in plan, plan
+        assert "rangepartitioning" not in plan, plan

@@ -147,3 +147,16 @@ def test_cli_sketch_rollup(spark, tmp_path, capsys):
     assert main(["sketch-rollup", "report", "--state", state]) == 0
     rep = capsys.readouterr().out
     assert "hll_est" in rep and "kmv_est" in rep
+
+
+def test_rollup_config_stamp_and_replay_launch_no_jobs(spark, tmp_path, in_job_group):
+    """The config stamp, its check and a replayed ingest (ledger hit)
+    are marker calls through the ledger's helpers — no Spark job."""
+    ev, shards = _shards(spark)
+    roll = SketchRollup(spark, str(tmp_path / "state"))
+    _, jobs = in_job_group(lambda: roll._check_or_stamp_config(stamp=True))
+    assert jobs == set()
+    assert roll.ingest(shards[0], "shard-0") is True
+    replayed, jobs = in_job_group(lambda: roll.ingest(shards[0], "shard-0"))
+    assert replayed is False
+    assert jobs == set()
