@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .plans import netflix_queries as q
 from .plans.netflix import NetflixPipeline
 from .session import get_spark
+from .sources.catalog import open_parquet
 
 log = logging.getLogger("data_engineer_task_spark")
 
@@ -161,7 +162,7 @@ def _maintain_main(argv: list[str]) -> int:
         return 0
     from .sources.parquet import zorder_write
 
-    zorder_write(spark.read.parquet(args.src), args.out,
+    zorder_write(open_parquet(spark, args.src), args.out,
                  [c.strip() for c in args.cols.split(",")], n_files=args.files)
     print(f"z-ordered {args.src} -> {args.out} on {args.cols}")
     return 0
@@ -212,13 +213,13 @@ def _curate_main(argv: list[str]) -> int:
     )
     embeddings = None
     if args.semantic_dedup:
-        embeddings = spark.read.parquet(args.semantic_dedup)
+        embeddings = open_parquet(spark, args.semantic_dedup)
         if args.embedding_id_col != args.id_col:
             embeddings = embeddings.withColumnRenamed(
                 args.embedding_id_col, args.id_col
             )
     manifest = CurationPipeline(spark, args.out, cfg).run(
-        spark.read.parquet(args.input),
+        open_parquet(spark, args.input),
         embeddings=embeddings,
         checkpoint_stages=args.checkpoint_stages,
         resume=args.resume,
@@ -265,7 +266,7 @@ def _sketch_rollup_main(argv: list[str]) -> int:
         value_col=args.value_col,
     )
     if args.op == "ingest":
-        done = roll.ingest(spark.read.parquet(args.input), args.input,
+        done = roll.ingest(open_parquet(spark, args.input), args.input,
                            force=args.force)
         print("ingested" if done else "skipped (ledger hit)")
         return 0

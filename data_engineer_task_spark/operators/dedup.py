@@ -485,44 +485,20 @@ def jaccard_join_exact(
     above 2/7) never over-tighten an exact-boundary pair away — the
     slack can only admit a few extra candidates, never lose one.
 
-    Caching note: TWO frames stay persisted after the returned
-    DataFrame is consumed, because both back its lineage and neither
-    can be unpersisted while it does: the shingle-set frame (unless
-    the caller passed ``shingle_sets=``, which stays the caller's) and
-    the candidate-pair frame. Loop or service callers should
-    ``spark.catalog.clearCache()`` between corpora — same constraint
-    as ``near_duplicates``."""
+    Caching note: the shingle-set frame stays persisted after the
+    returned DataFrame is consumed (it backs its lineage; a frame the
+    caller passed as ``shingle_sets=`` stays the caller's); loop or
+    service callers should ``spark.catalog.clearCache()`` between
+    corpora — same constraint as ``near_duplicates``."""
     if shingle_sets is not None:
         sets = shingle_sets  # caller-persisted shared frame
     else:
         sets = shingle_set(df, id_col, text_col, shingle_k=shingle_k).persist()
         sets.count()  # materialize before AQE races the three consumers
 
-    # r11 (guide §3.2, VERDICT r10 item 6): verify only ever reads the
-    # shingle arrays of docs that SURVIVE candidate generation, so
-    # semi-join the array build's input down to those ids before the
-    # collect_set shuffle — at a fixed dup rate candidates are a small
-    # fraction of the corpus, so this prunes the verify stage's big
-    # side by orders of magnitude at scale. The candidate frame now
-    # has THREE consumers (two id projections + the final pair join),
-    # and ReuseExchange does NOT cover them (measured: the unpersisted
-    # form re-planned the whole prefix-window candidate stage three
-    # times, 259-node plan, 1.6× slower) — persist + eager count, the
-    # same AQE-racing-consumers pattern near_duplicates documents. AQE
-    # picks the semi-join strategy from the candidate frame's REAL
-    # runtime size (no explicit broadcast hint — candidate ids grow
-    # with the corpus, CLAUDE.md broadcast rule).
-    cands = _ppjoin_candidates(sets, id_col, threshold).persist()
-    cands.count()
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    arrs = (
-        sets.join(cand_ids, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_set("shingle")).alias("shset"))
+    cands = _ppjoin_candidates(sets, id_col, threshold)
+    arrs = sets.groupBy(id_col).agg(
+        F.array_sort(F.collect_set("shingle")).alias("shset")
     )
     aa = arrs.select(
         F.col(id_col).alias("id_a"), F.col("shset").alias("sh_a")

@@ -14,28 +14,30 @@ from pyspark.sql import functions as F
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Rows of ``left`` with no match in ``right``.
+    """Rows of ``left`` with no match in ``right`` (NOT EXISTS).
 
     Reference pattern: LEFT JOIN ... WHERE right.key IS NULL
     (``queries.py:40-51``). Spark has a first-class anti join — no
     outer-join materialization, and the probe side never shuffles the
-    payload columns. Right side is pruned to the join key so a
-    broadcast-hash anti join is possible whenever the distinct keys fit
-    the broadcast threshold, regardless of right's payload width.
+    payload columns. Right side is pruned to the join key, and plans
+    exactly as Spark's own ``NOT EXISTS``: duplicate keys cannot change
+    an anti join's rows, so de-duplicating them first would only add an
+    aggregate, a shuffle stage and a job ahead of the broadcast.
     """
     on = [on] if isinstance(on, str) else list(on)
-    return left.join(right.select(*on).distinct(), on, "left_anti")
+    return left.join(right.select(*on), on, "left_anti")
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Rows of ``left`` with ≥1 match in ``right`` (EXISTS).
+    """Rows of ``left`` with ≥1 match in ``right`` (EXISTS), each once.
 
     Reference pattern: client-side IN-list splicing between two queries
     (``task.py:222-223``, ``queries.py:115-121``) — collapses into one
-    distributed semi join, no driver round-trip.
+    distributed semi join, no driver round-trip. Same key-only right
+    side as ``anti_join``, the shape Spark gives ``EXISTS``.
     """
     on = [on] if isinstance(on, str) else list(on)
-    return left.join(right.select(*on).distinct(), on, "left_semi")
+    return left.join(right.select(*on), on, "left_semi")
 
 
 def top_k(df: DataFrame, order_by: Sequence[Column], k: int = 1) -> DataFrame:

@@ -165,7 +165,7 @@ def _lineitem_revenue_bound(sf_dir: str, li: DataFrame) -> int:
     whether Spark's accumulator would."""
     from ..sources.catalog import parquet_file_identity
 
-    ident = parquet_file_identity(sf_dir, "lineitem")
+    ident = parquet_file_identity(f"{sf_dir}/lineitem.parquet")
     files, key = ident if ident is not None else ([], None)
     if key is not None and key in _REV_BOUND_CACHE:
         return _REV_BOUND_CACHE[key]

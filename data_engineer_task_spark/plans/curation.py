@@ -38,6 +38,7 @@ from ..operators.graph import connected_components
 from ..operators.quality import quality_gate
 from ..operators.sampling import hash_split
 from ..operators.text import normalize_text
+from ..sources.catalog import open_parquet
 
 
 @dataclass
@@ -336,9 +337,9 @@ class CurationPipeline:
             path = os.path.join(stages_dir, name)
             if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
                 resumed.add(name)
-                return self.spark.read.parquet(path)
+                return open_parquet(self.spark, path)
             build().write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
+            return open_parquet(self.spark, path)
 
         docs = stage("input", docs)
 
@@ -497,7 +498,7 @@ class CurationPipeline:
                 # alone determines every downstream row.
                 resumed.add("semantic_dedup")
                 kept_sem = stage(
-                    "semantic_dedup", self.spark.read.parquet(sem_path)
+                    "semantic_dedup", open_parquet(self.spark, sem_path)
                 )
                 rejects_semantic = deduped.join(
                     kept_sem.select(cfg.id_col), cfg.id_col, "left_anti"

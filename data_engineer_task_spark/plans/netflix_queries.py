@@ -16,24 +16,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import top_k, yoy_growth
+from ..operators.relational import anti_join, top_k, yoy_growth
 
 
 def shows_without_crew(shows: DataFrame, movie_crew: DataFrame) -> DataFrame:
     """Q1 ``query4_1_1``: shows with no crew at all. [verified] = 299.
-
-    A plain ``left_anti`` on the key, as the SQL twin: de-duplicating
-    the right side first (``operators.anti_join``) only adds an
-    aggregate and a shuffle stage ahead of the broadcast."""
-    return shows.join(movie_crew.select("show_id"), "show_id", "left_anti").agg(
+    A plain key-only ``left_anti``, as the SQL twin."""
+    return anti_join(shows, movie_crew, "show_id").agg(
         F.count(F.lit(1)).alias("n_shows_no_crew")
     )
 
 
 def shows_without_listings(shows: DataFrame, listings: DataFrame) -> DataFrame:
     """Q2 ``query4_1_2``: shows with no genre listing. [verified] = 0.
-    Same plain ``left_anti`` shape as Q1."""
-    return shows.join(listings.select("show_id"), "show_id", "left_anti").agg(
+    Same shape as Q1."""
+    return anti_join(shows, listings, "show_id").agg(
         F.count(F.lit(1)).alias("n_shows_no_listing")
     )
 

@@ -38,6 +38,7 @@ from ..operators.sketch import (
     kmv_merge,
     kmv_sketch,
 )
+from ..sources.catalog import open_parquet
 from ..sources.ledger import Ledger, read_marker, write_marker
 
 
@@ -175,7 +176,7 @@ class SketchRollup:
                 f"no shards ingested at {self.state_dir} — call "
                 "ingest() at least once before estimates()"
             )
-        return self.spark.read.parquet(*paths)
+        return open_parquet(self.spark, *paths)
 
     def estimates(self) -> DataFrame:
         """Fold ALL persisted shard sketches and estimate per group:

@@ -18,6 +18,36 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The driver heap defaults to 3/8 of the host's RAM, at most 48 GiB: a
+# 128 GiB host keeps 48g, a 16 GiB host gets 6g (the whole test tier
+# runs there; a 48g heap grows past physical RAM and the JVM is
+# OOM-killed). SPARK_GRAFT_DRIVER_MEM overrides it.
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` sized from ``MemTotal`` in ``meminfo``;
+    48g when the file is unreadable."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{max(1024, min(_MAX_DRIVER_MEM_MB, kb * 3 // 8 // 1024))}m"
+
+
+def _workers_import_package() -> None:
+    """Put the package's parent directory on the ``PYTHONPATH`` the
+    gateway JVM inherits, so Python workers (Arrow UDFs, streaming
+    Python sinks) import ``data_engineer_task_spark`` from any working
+    directory, not only from the one holding the package."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
 
 def get_spark(
     app_name: str = "data_engineer_task_spark",
@@ -26,6 +56,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session. Idempotent via getOrCreate."""
     cpus = cpus or DEFAULT_CPUS
+    _workers_import_package()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -35,7 +66,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Whole-stage-codegen class cache (r10 optimization, guide §1

@@ -3,30 +3,34 @@
 Every table in TESTDATA.md is one parquet file under
 ``{sf_dir}/{name}.parquet``. ``register_testdata`` mirrors the DuckDB
 oracle's pre-registered views so ``spark.sql`` text matches oracle SQL
-table names one-for-one.
+table names one-for-one. ``open_parquet`` is the package's one way to
+open parquet: it infers a file set's schema once per process.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import copy
+import threading
+from collections import OrderedDict
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import TESTDATA_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # Older driver testdata stored events.ts as TIMESTAMP(NANOS),
-        # which Spark's reader rejects. Read nanos as long and
-        # floor-convert to micros — identical to DuckDB's ns→us
-        # truncation, so oracle-safe.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(raw.dtypes).get("ts") == "bigint":
-            raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # Older driver testdata stored events.ts as TIMESTAMP(NANOS), which
+    # Spark's reader rejects. Read nanos as long and floor-convert to
+    # micros — identical to DuckDB's ns→us truncation, so oracle-safe.
+    # Set before EVERY table open, not only events: the flag is part of
+    # the schema memo's key, so one conf state for every open keeps a
+    # table's key stable whatever order the tables are opened in.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = open_parquet(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(raw.dtypes).get("ts") == "bigint":
+        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return _normalize_ntz(spark, raw)
 
 
@@ -71,30 +75,41 @@ _BROADCAST_BYTES_PER_VALUE = 16
 _BROADCAST_LIMIT_BYTES = 256 << 20
 
 
-def parquet_file_identity(
-    sf_dir: str, name: str
-) -> tuple[list[str], tuple] | None:
-    """The part-file list and a (path, size, mtime_ns) identity key
-    for ``{sf_dir}/{name}.parquet`` (file or partitioned dir) — the
-    shared base of every footer-metadata shortcut (row counts, column
-    stats), so the walk/sort/stat pattern exists ONCE (code-review r10
-    finding 4). Returns None when the layout is missing or a file
-    vanishes between walk and stat (testdata regeneration racing a
-    run) — callers fall back to not knowing."""
+def parquet_file_identity(path: str) -> tuple[list[str], tuple] | None:
+    """The part-file list and a (path, size, mtime_ns) identity key for
+    a parquet path or glob — a single file, a (partitioned) directory,
+    or a glob over either — the shared base of every footer-metadata
+    shortcut (row counts, column stats) and of the schema memo, so the
+    walk/sort/stat pattern exists ONCE (code-review r10 finding 4).
+    Hidden names (``_SUCCESS``, ``_temporary/``, ``.crc``) are skipped
+    as Spark's own listing skips them. Returns None when the layout is
+    missing, not on the local FS (a non-``file:`` URI: object stores,
+    HDFS), a ``{a,b}`` alternation Python's glob cannot expand, or a
+    file vanishes between walk and stat (testdata regeneration racing
+    a run) — callers fall back to not knowing."""
+    import glob
     import os
+    from urllib.parse import urlparse
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    if path.startswith("file:"):
+        path = urlparse(path).path
+    if "://" in path or "{" in path:
+        return None
     try:
         files: list[str] = []
-        if os.path.isdir(path):
-            for root, _dirs, names in os.walk(path):
-                files += [
-                    os.path.join(root, n)
-                    for n in names
-                    if n.endswith(".parquet")
-                ]
-        elif os.path.exists(path):
-            files = [path]
+        roots = glob.glob(path) if glob.has_magic(path) else [path]
+        for root in roots:
+            if os.path.isdir(root):
+                for top, dirs, names in os.walk(root):
+                    dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                    files += [
+                        os.path.join(top, n)
+                        for n in names
+                        if n.endswith(".parquet")
+                        and not n.startswith(("_", "."))
+                    ]
+            elif os.path.exists(root):
+                files.append(root)
         if not files:
             return None
         files.sort()
@@ -108,12 +123,83 @@ def parquet_file_identity(
         return None
 
 
+# Parquet schema inference (``mergeSchemasInParallel``) is a one-task
+# Spark job on EVERY ``spark.read.parquet``, even for one file. The
+# memo keeps each inferred schema under the files' identity plus the
+# session confs that shape inference; a later open of the same files
+# reads with ``.schema(cached)`` and launches no job. LRU-bounded.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
+    idents = [parquet_file_identity(p) for p in paths]
+    if not idents or None in idents:
+        return None
+    confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
+    return paths, tuple(i[1] for i in idents), confs
+
+
+def _memo_get(key: tuple | None) -> StructType | None:
+    if key is None:
+        return None
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SCHEMA_MEMO.move_to_end(key)
+        return schema
+
+
+def _infer(spark: SparkSession, paths: tuple[str, ...], key: tuple | None) -> DataFrame:
+    df = spark.read.parquet(*paths)
+    if key is not None:
+        with _SCHEMA_LOCK:
+            _SCHEMA_MEMO[key] = copy.deepcopy(df.schema)
+            while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+                _SCHEMA_MEMO.popitem(last=False)
+    return df
+
+
+def open_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each file set's schema
+    once per process. The memo key is the paths as given, every file's
+    (path, size, mtime_ns) identity and the values of ``_SCHEMA_CONFS``;
+    a hit reads with that schema and launches no Spark job. A rewritten
+    file, a conf change, or a path the local FS cannot stat infers as a
+    plain read does. The package's one way to open parquet."""
+    key = _schema_key(spark, paths)
+    schema = _memo_get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    return _infer(spark, paths, key)
+
+
+def parquet_schema(spark: SparkSession, *paths: str) -> StructType:
+    """The schema ``open_parquet(spark, *paths)`` reads with, from the
+    memo when it holds the key — no DataFrame is built then. A copy:
+    ``StructType.add`` mutates in place."""
+    key = _schema_key(spark, paths)
+    schema = _memo_get(key)
+    if schema is None:
+        schema = _infer(spark, paths, key).schema
+    return copy.deepcopy(schema)
+
+
 def table_row_count(sf_dir: str, name: str) -> int | None:
     """Exact row count from parquet FOOTER metadata — no scan, no Spark
     job; cached on the files' (path, size, mtime) identity. Returns
     None when the layout is unreadable (caller falls back to not
     knowing)."""
-    ident = parquet_file_identity(sf_dir, name)
+    ident = parquet_file_identity(f"{sf_dir}/{name}.parquet")
     if ident is None:
         return None
     files, key = ident

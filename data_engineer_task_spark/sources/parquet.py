@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import open_parquet
+
 
 def read_parquet(
     spark: SparkSession,
@@ -34,7 +36,12 @@ def read_parquet(
     ``ignore_corrupt=True`` skips unreadable files instead of failing
     the scan — the salvage-read for a table with a torn write. Off by
     default: silently dropping data is never the right default; turn it
-    on deliberately, count what you got, and reconcile."""
+    on deliberately, count what you got, and reconcile.
+
+    With neither option this is ``catalog.open_parquet`` (schema
+    inferred once per file set); either option infers on every read."""
+    if not (merge_schema or ignore_corrupt):
+        return open_parquet(spark, path)
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
@@ -91,7 +98,7 @@ def compact_parquet(
 
     total = _tree_size_bytes(spark, path)
     n_files = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path)
+    df = open_parquet(spark, path)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return n_files
 
@@ -206,7 +213,7 @@ def delete_where(
     # must never remove rows it can't prove match).
     hit = F.coalesce(predicate, F.lit(False))
 
-    with_file = spark.read.parquet(path).withColumn(
+    with_file = open_parquet(spark, path).withColumn(
         "_src_file", F.col("_metadata.file_path")
     )
     affected = [
@@ -248,7 +255,7 @@ def delete_where(
         }
 
     # Re-read ONLY the affected files; split into survivors and victims.
-    sub = spark.read.parquet(*affected)
+    sub = open_parquet(spark, *affected)
     n_deleted = sub.where(hit).count()
     survivors = sub.where(~hit)
 

@@ -19,18 +19,24 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.catalog import open_parquet, parquet_file_identity, parquet_schema
+
 
 @contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Run a streaming query with a reduced shuffle-partition count.
+def _stream_shuffle_partitions(spark: SparkSession):
+    """Run a streaming query with a reduced shuffle-partition count,
+    ``min(8, defaultParallelism)``: one wave of stateful tasks on the
+    session's cores.
 
     Each stateful operator materializes one state-store instance PER
     shuffle partition PER micro-batch; at local test scale 32
     partitions is pure overhead (32 HDFS-backed store inits + commits
-    per stage for a few thousand state rows). A real deployment sizes
-    this to state volume, and the value is pinned into the checkpoint
-    by Structured Streaming itself (restarts keep the original count),
-    so lowering it here never diverges a resumed query."""
+    per stage for a few thousand state rows), and 8 on 4 cores is two
+    waves of tiny tasks. A real deployment sizes this to state volume,
+    and the value is pinned into the checkpoint by Structured Streaming
+    itself (restarts keep the original count), so lowering it here
+    never diverges a resumed query."""
+    n = min(8, spark.sparkContext.defaultParallelism)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -133,6 +139,18 @@ def sessionize(
     )
 
 
+def _ts_type(spark: SparkSession, glob_path: str) -> str | None:
+    """How the events files store ``ts`` ("bigint" = legacy nanos read
+    as long, "timestamp_ntz" = naive micros, "timestamp"), read from
+    the memoised parquet schema: a file set already opened in this
+    process costs no probe DataFrame and no inference job."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = parquet_schema(spark, glob_path)
+    return next(
+        (f.dataType.simpleString() for f in schema if f.name == "ts"), None
+    )
+
+
 def _event_stream(spark: SparkSession, glob_path: str) -> DataFrame:
     """Parquet-backed events stream normalized to ``ts: timestamp``.
 
@@ -140,11 +158,10 @@ def _event_stream(spark: SparkSession, glob_path: str) -> DataFrame:
     TIMESTAMP(NANOS) (readable only as long via legacy nanosAsLong),
     naive micros (reads as TIMESTAMP_NTZ), and adjusted micros
     (TIMESTAMP). A streaming source needs a declared schema up front,
-    so probe the files with a one-off batch read (metadata only — no
-    data scan) and declare + convert accordingly. All three store UTC
-    instants, so the normalized stream is identical in every case."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = dict(spark.read.parquet(glob_path).dtypes).get("ts")
+    so take the stored ``ts`` type from the files' schema (``_ts_type``)
+    and declare + convert accordingly. All three store UTC instants, so
+    the normalized stream is identical in every case."""
+    probe = _ts_type(spark, glob_path)
     src = spark.readStream.option("maxFilesPerTrigger", 1)
     if probe == "bigint":  # legacy nanos-as-long
         return (
@@ -170,7 +187,7 @@ def _event_bounds(spark: SparkSession, glob_path: str) -> DataFrame:
     explicitly pinned UTC session zone, so the cutoff is correct even
     if this runs before/without the stream-side probe."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(glob_path)
+    df = open_parquet(spark, glob_path)
     probe = dict(df.dtypes).get("ts")
     if probe == "bigint":  # legacy nanos-as-long
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -209,15 +226,10 @@ def _ordered_replay(
     identity — bench reps and repeated gates re-stream the same chunk
     files without re-writing them."""
     import glob as globmod
-    import os
     import tempfile
 
-    src_files = sorted(globmod.glob(glob_path))
-    key = tuple(
-        (f, st.st_size, st.st_mtime_ns)
-        for f in src_files
-        for st in [os.stat(f)]
-    ) or (glob_path,)
+    ident = parquet_file_identity(glob_path)
+    key = ident[1] if ident is not None else (glob_path,)
     cached = _REPLAY_CACHE.get(key)
     if cached is not None and globmod.glob(cached):
         return cached

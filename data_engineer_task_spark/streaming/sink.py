@@ -21,6 +21,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.upsert import keep_latest
+from ..sources.catalog import open_parquet
 
 _POINTER = "_LATEST"
 
@@ -54,13 +55,13 @@ def read_snapshot(
         path = os.path.join(out_dir, v)
         if not os.path.isdir(path):
             raise ValueError(f"snapshot {v!r} not present in {out_dir}")
-        return spark.read.parquet(path)
+        return open_parquet(spark, path)
     ptr = os.path.join(out_dir, _POINTER)
     if not os.path.exists(ptr):
         return None
     with open(ptr) as fh:
         version = fh.read().strip()
-    return spark.read.parquet(os.path.join(out_dir, version))
+    return open_parquet(spark, os.path.join(out_dir, version))
 
 
 def list_versions(out_dir: str) -> list[str]:

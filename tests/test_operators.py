@@ -80,10 +80,23 @@ def test_surrogate_key_deterministic(spark):
 
 
 def test_anti_semi_join(spark):
-    left = spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], ["k", "v"])
-    right = spark.createDataFrame([(2, "q"), (2, "r")], ["k", "w"])
-    assert {r["k"] for r in anti_join(left, right, "k").collect()} == {1, 3}
-    assert {r["k"] for r in semi_join(left, right, "k").collect()} == {2}
+    # duplicate keys on BOTH sides: each left row comes out at most
+    # once however many right rows match it
+    left = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (2, "y2"), (3, "z")], ["k", "v"]
+    )
+    right = spark.createDataFrame([(2, "q"), (2, "r"), (4, "s")], ["k", "w"])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    anti, semi = anti_join(left, right, "k"), semi_join(left, right, "k")
+    assert rows(anti) == [(1, "x"), (3, "z")]
+    assert rows(semi) == [(2, "y"), (2, "y2")]
+    # the EXISTS shape: nothing de-duplicates the right side first
+    for df in (anti, semi):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Aggregate" not in plan, plan
 
 
 def test_top_k_null_ordering(spark):

@@ -403,11 +403,6 @@ def test_jaccard_exact_candidates_never_cartesian(spark):
     plan = _plan(spark, "doc_jaccard_join_exact")
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # r11: the verify stage's shingle-array build is semi-join-pruned
-    # to candidate ids before its collect_set shuffle (guide §3.2) —
-    # at a fixed dup rate that bounds the verify input by the
-    # candidate set instead of the corpus.
-    assert "LeftSemi" in plan, plan
 
 
 def test_skyline_frontier_broadcasts_and_bounds_the_window(spark):
@@ -777,6 +772,20 @@ def test_create_data_frame_only_inside_local_frame():
         if "createDataFrame(" in p.read_text()
     )
     assert sites == ["sources/local.py"], sites
+
+
+def test_parquet_opens_only_inside_open_parquet():
+    """Every parquet open in the package goes through
+    ``sources/catalog.py::open_parquet``, which infers a file set's
+    schema once per process: a raw ``spark.read.parquet(`` launches a
+    schema-inference job on every open."""
+    pkg = Path(__file__).resolve().parent.parent / "data_engineer_task_spark"
+    sites = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if re.search(r"\bread\.parquet\(", p.read_text())
+    )
+    assert sites == ["sources/catalog.py"], sites
 
 
 @pytest.mark.parametrize(

@@ -503,3 +503,52 @@ def test_stream_static_join_matches_batch_and_is_stateless(
     )
     assert [tuple(r) for r in streamed] == [tuple(r) for r in batch]
     assert len(streamed) > 0
+
+
+def test_stream_state_runs_in_one_wave_of_tasks(spark):
+    """``stream_hourly_event_stats`` keeps its state in
+    ``min(8, defaultParallelism)`` partitions: no stage of its
+    micro-batches runs more tasks than the session has cores."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from data_engineer_task_spark.plans.analytics import QUERIES
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids, self.state_parts = [], []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            self.state_parts += [
+                s.numShufflePartitions for s in event.progress.stateOperators
+            ]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    sc = spark.sparkContext
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        QUERIES["stream_hourly_event_stats"](spark, SF_SMOKE).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    cores = sc.defaultParallelism
+    assert listener.state_parts
+    assert set(listener.state_parts) == {min(8, cores)}
+    store = sc._jsc.sc().statusStore()
+    tasks = []
+    for run_id in listener.ids:
+        for jid in sc.statusTracker().getJobIdsForGroup(run_id):
+            ids = store.job(jid).stageIds()
+            tasks += [
+                store.lastStageAttempt(ids.apply(i)).numTasks()
+                for i in range(ids.size())
+            ]
+    assert tasks and max(tasks) <= cores, tasks

@@ -51,9 +51,6 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -25,9 +25,6 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tests"))
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", os.path.join(_REPO, ".sf1data"))
 
 from data_engineer_task_spark.plans.analytics import ORACLE, QUERIES

@@ -30,9 +30,6 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 
 from data_engineer_task_spark.plans.audit import analyzed_plan, unpartitioned_specs
 from data_engineer_task_spark.session import get_spark

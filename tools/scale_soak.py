@@ -35,12 +35,6 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# Arrow-UDF families (PQ encode) pickle functions that import the
-# package — python WORKER processes resolve it via PYTHONPATH, not the
-# driver's sys.path.
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
-).rstrip(os.pathsep)
 
 from pyspark.sql import functions as F
 
