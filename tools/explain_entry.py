@@ -12,18 +12,31 @@ Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1) WITHOUT
 executing the query (explain is plan-only), so this is cheap; entries
 whose python builds run driver jobs (persist+count materialization)
 still pay those.
+
+What it writes is masked so two dumps diff cleanly: expression ids
+(``#123``) become ``#N`` and the random ``stream_replay_*`` temp-dir
+names of the streaming entries become ``stream_replay_*``.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_engineer_task_spark.plans.analytics import QUERIES  # noqa: E402
 from data_engineer_task_spark.session import get_spark  # noqa: E402
+
+_EXPR_ID = re.compile(r"#\d+")
+_REPLAY_DIR = re.compile(r"stream_replay_[^/\s,\]\)]+")
+
+
+def mask(text: str) -> str:
+    """The plan text with its run-to-run noise masked."""
+    return _REPLAY_DIR.sub("stream_replay_*", _EXPR_ID.sub("#N", text))
 
 
 def main() -> None:
@@ -41,8 +54,8 @@ def main() -> None:
     spark = get_spark("explain")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
-        text = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        text = mask(
+            df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         )
         if args.out:
             os.makedirs(args.out, exist_ok=True)
