@@ -14,8 +14,9 @@ whose python builds run driver jobs (persist+count materialization)
 still pay those.
 
 What it writes is masked so two dumps diff cleanly: expression ids
-(``#123``) become ``#N`` and the random ``stream_replay_*`` temp-dir
-names of the streaming entries become ``stream_replay_*``.
+(``#123``) become ``#N``, exchange ids (``plan_id=123``) become
+``plan_id=N`` and the random ``stream_replay_*`` temp-dir names of the
+streaming entries become ``stream_replay_*``.
 """
 
 from __future__ import annotations
@@ -31,12 +32,14 @@ from data_engineer_task_spark.plans.analytics import QUERIES  # noqa: E402
 from data_engineer_task_spark.session import get_spark  # noqa: E402
 
 _EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
 _REPLAY_DIR = re.compile(r"stream_replay_[^/\s,\]\)]+")
 
 
 def mask(text: str) -> str:
     """The plan text with its run-to-run noise masked."""
-    return _REPLAY_DIR.sub("stream_replay_*", _EXPR_ID.sub("#N", text))
+    text = _PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", text))
+    return _REPLAY_DIR.sub("stream_replay_*", text)
 
 
 def main() -> None:
