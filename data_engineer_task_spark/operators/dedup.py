@@ -205,8 +205,8 @@ def near_duplicates(
 
 def _band_array(n_hashes: int, band_size: int):
     """The banded-signature expression BOTH candidate generators share
-    (and the SQL oracles mirror in analytics.py::_near_dup_tail /
-    ext19's _BAND_CASE): band value = md5 of the '|'-joined member
+    (and the SQL oracles mirror in plans/dedup.py::_near_dup_tail /
+    _BAND_CASE): band value = md5 of the '|'-joined member
     hashes. One definition — the incremental-vs-batch invariant test
     depends on these staying byte-identical."""
     n_bands = n_hashes // band_size
@@ -799,9 +799,10 @@ def containment_verify(
     # LEFT join + zero fill, mirroring jaccard_verify (code-review r5):
     # a candidate pair with NO shared shingles (a band collision of
     # disjoint sets) must report containment 0.0, not vanish — the
-    # ext23 oracle has ALWAYS spelled the LEFT JOIN/coalesce(0), so
-    # the former inner join here was a latent cross-engine divergence
-    # waiting for the first disjoint banded candidate.
+    # near_dup_containment_pairs oracle has ALWAYS spelled the LEFT
+    # JOIN/coalesce(0), so the former inner join here was a latent
+    # cross-engine divergence waiting for the first disjoint banded
+    # candidate.
     return (
         candidates.join(inter, ["id_a", "id_b"], "left")
         .na.fill({"n_inter": 0})

@@ -1092,7 +1092,7 @@ def test_poisson_bootstrap_weights_match_poisson1(spark):
 
     from pyspark.sql import functions as F
 
-    from data_engineer_task_spark.plans.analytics_ext22 import (
+    from data_engineer_task_spark.plans.relational import (
         _pois_w_col,
         _u16_window_col,
     )

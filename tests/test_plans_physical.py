@@ -1016,12 +1016,15 @@ def test_low_cardinality_window_sites_are_bounded():
     shortlist, a rank-limit pushdown). Every source site whose window
     partitions ONLY by literal low-cardinality keys must be registered
     here with its bound; new sites fail until justified, fixed sites
-    must be removed (shrink-only, like the window gate). The five
+    must be removed (shrink-only, like the window gate). A site is keyed
+    by its enclosing function, not its file, so regrouping modules
+    never merges two sites' counts. The five
     corpus-sized offenders this audit found (LOO encoding, KS
     cumulative/argmax, balanced-lang sample, segment deciles, segment
     analytic ranks) were migrated to groupBy+broadcast /
     ordered_prefix(partition_by=...) spellings and are deliberately
     NOT in this list."""
+    import ast
     import glob
     import os
     import re
@@ -1038,6 +1041,11 @@ def test_low_cardinality_window_sites_are_bounded():
     found: dict[tuple[str, tuple[str, ...]], int] = {}
     for f in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
         src = open(f).read()
+        spans = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
         for m in re.finditer(r"W\.partitionBy\(([^)]*)\)", src):
             args = [a.strip() for a in m.group(1).split(",") if a.strip()]
             quoted = [
@@ -1047,45 +1055,51 @@ def test_low_cardinality_window_sites_are_bounded():
             # member multiply the partition count out of the funnel
             # regime — only all-literal, all-low-card specs flag
             if args and len(quoted) == len(args) and set(quoted) <= LOW:
-                key = (os.path.basename(f), tuple(quoted))
+                line = src.count("\n", 0, m.start()) + 1
+                enclosing = [s for s in spans if s[0] <= line <= s[1]]
+                fn = (
+                    min(enclosing, key=lambda s: s[1] - s[0])[2]
+                    if enclosing else "<module>"
+                )
+                key = (fn, tuple(quoted))
                 found[key] = found.get(key, 0) + 1
 
-    # (file, partition keys) -> (site count, why the window input is
-    # bounded). Shrink-only.
+    # (innermost enclosing function, partition keys) -> (site count,
+    # why the window input is bounded). Shrink-only.
     allow: dict[tuple[str, tuple[str, ...]], tuple[int, str]] = {
-        ("analytics_ext.py", ("source",)): (
+        ("doc_source_capped_sample", ("source",)): (
             1, "literal rn<=50 cap: WindowGroupLimit pushes the limit below the sort"),
-        ("analytics_ext10.py", ("region",)): (
+        ("region_budget_allocation", ("region",)): (
             1, "region x nation rollup (<=25 rows)"),
-        ("analytics_ext10.py", ("event_type",)): (
+        ("event_hourly_interpolation", ("event_type",)): (
             2, "per-(type, hour) spine rollup (calendar-bounded)"),
-        ("analytics_ext14.py", ("event_type",)): (
+        ("event_value_cusum_changepoint", ("event_type",)): (
             1, "per-(type, day) rollup (calendar-bounded)"),
-        ("analytics_ext14.py", ("c_nationkey",)): (
+        ("customer_segment_mode_imputation", ("c_nationkey",)): (
             1, "nation x segment mode rollup (<=125 rows)"),
-        ("analytics_ext2.py", ("from_type",)): (
+        ("event_transition_matrix", ("from_type",)): (
             1, "type x type transition rollup (<=25 rows)"),
-        ("analytics_ext2.py", ("lang",)): (
+        ("lang_source_chisq", ("lang",)): (
             1, "lang x source contingency rollup"),
-        ("analytics_ext2.py", ("source",)): (
+        ("lang_source_chisq", ("source",)): (
             1, "lang x source contingency rollup"),
-        ("analytics_ext2.py", ("o_orderstatus",)): (
+        ("status_priority_entropy", ("o_orderstatus",)): (
             1, "per-status count rollup (<=3 rows)"),
-        ("analytics_ext23.py", ("actual_lang",)): (
+        ("lang_id_confusion", ("actual_lang",)): (
             1, "lang x lang confusion rollup"),
-        ("analytics_ext23.py", ("passed",)): (
+        ("quality_dup_interaction", ("passed",)): (
             1, "2x2 contingency cells"),
-        ("analytics_ext31.py", ("seg",)): (
+        ("customer_t_closeness", ("seg",)): (
             2, "t-closeness segment x 11-bin grid"),
-        ("analytics_ext31.py", ("event_type",)): (
+        ("events_reservoir_sample", ("event_type",)): (
             1, "k_smallest output (<= salt_buckets*k rows/group)"),
-        ("analytics_ext6.py", ("lang",)): (
+        ("lang_source_mutual_info", ("lang",)): (
             1, "lang x source MI cell rollup"),
-        ("analytics_ext6.py", ("source",)): (
+        ("lang_source_mutual_info", ("source",)): (
             1, "lang x source MI cell rollup"),
-        ("analytics_ext7.py", ("event_type",)): (
+        ("event_value_psi", ("event_type",)): (
             1, "per-(type, bin) chi-square cells (fixed bins)"),
-        ("analytics_ext9.py", ("region",)): (
+        ("nation_revenue_share", ("region",)): (
             1, "region x nation rollup (<=25 rows)"),
     }
     unexpected = {

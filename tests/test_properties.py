@@ -210,7 +210,7 @@ def test_int8_quantization_error_bounded_by_half_step(spark, vecs):
 def test_in_row_ngrams_match_python_reference(spark, grams, n):
     """The in-row n-gram transform must agree with the obvious Python
     sliding window on every token list, including too-short ones."""
-    from data_engineer_task_spark.plans.analytics_ext2 import _ngrams
+    from data_engineer_task_spark.plans.text import _ngrams
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(grams)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -371,7 +371,7 @@ def test_holt_tracks_linear_series_exactly(spark, const, slope, n):
         (1, datetime.datetime(2024, 1, 1 + t, 12, 0, 0), float(const + slope * t))
         for t in range(n)
     ]
-    from data_engineer_task_spark.plans.analytics_ext22 import (
+    from data_engineer_task_spark.plans.events import (
         _HOLT_A,
         _HOLT_AB,
         _HOLT_AB1,
@@ -408,7 +408,7 @@ def test_zorder_interleave_bijective_and_decodable(spark):
     bits recovers (x, y) exactly, and distinct grid cells map to
     distinct keys — the property that makes per-file min/max ranges
     meaningful on both dimensions."""
-    from data_engineer_task_spark.plans.analytics_ext22 import _z_col
+    from data_engineer_task_spark.plans.relational import _z_col
 
     # strided coordinates cover the full 16-bit range INCLUDING bit 15
     # — the high bit whose (1 << 31) interleave term wraps negative in

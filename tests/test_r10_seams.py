@@ -95,7 +95,7 @@ def test_wav_synthesizer_boundary_grid(spark):
     parsed frame count must equal the oracle's dl // (2*ch) arithmetic
     — including dl=4, ch=2 where exactly ONE frame fills the chunk."""
     from data_engineer_task_spark.operators.multimodal import header_decode
-    from data_engineer_task_spark.plans.analytics_ext38 import synth_header_media
+    from data_engineer_task_spark.plans.multimodal import synth_header_media
 
     # doc_id % 4 == 2 selects the WAV branch; ch = 1 + (id>>2) % 2 and
     # dl = 4 * (1 + (id>>3) % 8) live in the bits ABOVE the selector
@@ -130,7 +130,7 @@ def test_footer_digest_dangling_symlink_fails_loudly(tmp_path):
     input is broken — the digest must raise (so ingest fails and no
     state tag is minted), never hand back a digest of nothing that
     would mint a stable-looking tag for unreadable data."""
-    from data_engineer_task_spark.plans.analytics_ext35 import _footer_digest
+    from data_engineer_task_spark.plans.sketch import _footer_digest
 
     link = tmp_path / "part-00000.parquet"
     link.symlink_to(tmp_path / "gone.parquet")
@@ -143,7 +143,7 @@ def test_footer_digest_small_file_and_growth(tmp_path):
     appending AFTER a digest was taken changes the digest (the
     stat-then-read race can only produce a tag that matches NEITHER
     version — which resolves to a fresh state dir, the safe side)."""
-    from data_engineer_task_spark.plans.analytics_ext35 import _footer_digest
+    from data_engineer_task_spark.plans.sketch import _footer_digest
 
     p = tmp_path / "tiny.parquet"
     p.write_bytes(b"PAR1 tiny body PAR1")

@@ -147,15 +147,16 @@ def test_keepbest_segment_seam_classify_matches_run(spark, seam_docs_dir, tmp_pa
     """classify() vs run() row-for-row on the EDGE corpus (the generic
     equivalence test uses benign testdata): same survivors, same
     reject stages, through the write-path surface."""
-    from data_engineer_task_spark.plans.analytics_ext32 import (
+    from data_engineer_task_spark.plans.dedup import (
+        _KEEPBEST_SEG,
         _MAX_ATL,
         _MAX_PR,
         _MAX_SWR,
         _MAX_TOKENS,
         _MIN_ATL,
         _MIN_TOKENS,
+        _THRESHOLD,
     )
-    from data_engineer_task_spark.plans.analytics_ext33 import _SEG, _THRESHOLD
     from data_engineer_task_spark.plans.curation import (
         CurationConfig,
         CurationPipeline,
@@ -172,7 +173,7 @@ def test_keepbest_segment_seam_classify_matches_run(spark, seam_docs_dir, tmp_pa
         near_dup_threshold=_THRESHOLD,
         near_dup_keep="best",
         segment_dedup=True,
-        segment_len=_SEG,
+        segment_len=_KEEPBEST_SEG,
     )
     docs = load_table(spark, seam_docs_dir, "documents").select("doc_id", "text")
     out_dir = str(tmp_path / "run_out")

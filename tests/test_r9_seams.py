@@ -30,7 +30,7 @@ def test_footer_digest_breaks_size_mtime_collisions(tmp_path):
     digests (and therefore different state tags): the r8 tag keyed on
     (name, size, mtime) and would have served generation-1 sketches
     against generation-2 data."""
-    from data_engineer_task_spark.plans.analytics_ext35 import _footer_digest
+    from data_engineer_task_spark.plans.sketch import _footer_digest
 
     p = tmp_path / "events.parquet"
     p.write_bytes(b"A" * 4096)
@@ -70,8 +70,8 @@ def test_kernel_digest_tracks_kernel_sources():
 
     from data_engineer_task_spark.operators import sketch as sketch_mod
     from data_engineer_task_spark.plans import sketch_rollup as rollup_mod
-    from data_engineer_task_spark.plans.analytics_ext26 import _K, _KMV_SCALE
-    from data_engineer_task_spark.plans.analytics_ext35 import _kernel_digest
+    from data_engineer_task_spark.plans.sketch import _K, _KMV_SCALE
+    from data_engineer_task_spark.plans.sketch import _kernel_digest
 
     h = hashlib.md5()
     for mod in (sketch_mod, rollup_mod):
@@ -93,7 +93,7 @@ def test_state_base_is_per_user_0700():
     with owner-only permissions (ADVICE r8: the r8 path was a
     predictable world-shared /tmp name another user could pre-create
     and poison)."""
-    from data_engineer_task_spark.plans.analytics_ext35 import _state_base
+    from data_engineer_task_spark.plans.sketch import _state_base
 
     base = _state_base()
     st = os.stat(base)
@@ -175,7 +175,7 @@ def test_integer_moments_escalate_past_int64(spark):
     (3.6e20) overflows it — without the count-guarded DECIMAL(38,0)
     escalation ANSI mode throws ArithmeticException here. The escalated
     path must return the exact value."""
-    from data_engineer_task_spark.plans.analytics_ext25 import _integer_moments
+    from data_engineer_task_spark.plans.embedding import _integer_moments
 
     rows = [([3_000_000_000, 2_000_000_000],) for _ in range(40)]
     base = spark.createDataFrame(rows, "q array<long>")
@@ -205,7 +205,7 @@ def test_header_synthesis_valid_at_extreme_doc_ids(spark):
     the zero id, and each format branch at the 2^40 scale a 100 TB
     corpus would reach."""
     from data_engineer_task_spark.operators.multimodal import header_decode
-    from data_engineer_task_spark.plans.analytics_ext38 import synth_header_media
+    from data_engineer_task_spark.plans.multimodal import synth_header_media
 
     ids = [0, 1, 2, 3, (1 << 40) + 0, (1 << 40) + 1, (1 << 40) + 2,
            (1 << 40) + 3, (1 << 62), (1 << 62) + 1, (1 << 62) + 2]

@@ -990,7 +990,7 @@ def test_pca_power_iteration_finds_planted_direction(spark, tmp_path):
     a large explained-variance share, and the run is deterministic."""
     import random
 
-    from data_engineer_task_spark.plans.analytics_ext25 import (
+    from data_engineer_task_spark.plans.embedding import (
         embedding_pca_top_component,
     )
 
