@@ -22,8 +22,9 @@ golden-label tests pin it). ``tools/refresh_gender_snapshot.py``
 derives a nam_dict-exact table when that lib is available, but writes
 it ALONGSIDE the snapshot by default and prints the label diff —
 replacing the curated snapshot (--overwrite) requires reconciling the
-diff and re-running the golden tests. The embedded ``_FALLBACK`` dict
-remains only as a last resort if the resource file is deleted.
+diff and re-running the golden tests. There is no built-in fallback
+list: a missing snapshot raises ``FileNotFoundError`` rather than
+silently relabel the personnel from a different table.
 """
 
 from __future__ import annotations
@@ -38,31 +39,6 @@ from pyspark.sql import types as T
 from ..sources.local import local_frame
 
 _FOLD = {"mostly_male": "male", "mostly_female": "female", "andy": "unknown"}
-
-# Minimal deterministic fallback (public common-name list). Only used
-# when gender_guesser is absent; tests that depend on exact reference
-# labels are skipped in that case.
-_FALLBACK = {
-    "james": "male", "john": "male", "robert": "male", "michael": "male",
-    "william": "male", "david": "male", "richard": "male", "joseph": "male",
-    "thomas": "male", "charles": "male", "daniel": "male", "matthew": "male",
-    "anthony": "male", "mark": "male", "paul": "male", "steven": "male",
-    "andrew": "male", "kenneth": "male", "george": "male", "kevin": "male",
-    "brian": "male", "edward": "male", "ronald": "male", "timothy": "male",
-    "jason": "male", "jeffrey": "male", "ryan": "male", "jacob": "male",
-    "adam": "male", "peter": "male", "woody": "male", "bill": "male",
-    "donald": "male", "ron": "male", "mary": "female", "patricia": "female",
-    "jennifer": "female", "linda": "female", "elizabeth": "female",
-    "barbara": "female", "susan": "female", "jessica": "female",
-    "sarah": "female", "karen": "female", "nancy": "female", "lisa": "female",
-    "margaret": "female", "betty": "female", "sandra": "female",
-    "ashley": "female", "dorothy": "female", "kimberly": "female",
-    "emily": "female", "donna": "female", "michelle": "female",
-    "carol": "female", "amanda": "female", "melissa": "female",
-    "deborah": "female", "stephanie": "female", "rebecca": "female",
-    "laura": "female", "emma": "female", "emilia": "female",
-    "phoebe": "female", "thandie": "female", "cher": "female",
-}
 
 GENDER_SCHEMA = T.StructType(
     [
@@ -79,13 +55,11 @@ def _mapping() -> dict[str, str]:
     """Canonical name→gender mapping, loaded from the checked-in
     snapshot (driver-side: the table is tiny and broadcast after).
     Labels in the file are already folded (male/female/unknown)."""
-    if _SNAPSHOT.exists():
-        with open(_SNAPSHOT, newline="") as f:
-            return {
-                row["name_key"].lower(): _FOLD.get(row["gender"], row["gender"])
-                for row in csv.DictReader(f)
-            }
-    return dict(_FALLBACK)
+    with open(_SNAPSHOT, newline="") as f:
+        return {
+            row["name_key"].lower(): _FOLD.get(row["gender"], row["gender"])
+            for row in csv.DictReader(f)
+        }
 
 
 def gender_lookup_df(spark: SparkSession) -> DataFrame:
