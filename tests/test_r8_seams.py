@@ -61,7 +61,7 @@ def _swap(segs: list[list[str]], pos: int, mk) -> list[list[str]]:
 def _seam_docs():
     """Ten documents hitting every keep-best × segment edge at once.
     All tokens are 30-80 per doc with 2-12 avg length, no stopwords,
-    no punctuation — every non-engineered doc passes the ext32 gate.
+    no punctuation — every non-engineered doc passes the curation gate.
     Jaccard values and LSH band hits are md5-deterministic, so the
     cluster structure below is stable across runs and engines."""
     A, B, C, D = (_seg(p) for p in ("wa", "wb", "wc", "wd"))

@@ -70,8 +70,7 @@ def test_kernel_digest_tracks_kernel_sources():
 
     from data_engineer_task_spark.operators import sketch as sketch_mod
     from data_engineer_task_spark.plans import sketch_rollup as rollup_mod
-    from data_engineer_task_spark.plans.sketch import _K, _KMV_SCALE
-    from data_engineer_task_spark.plans.sketch import _kernel_digest
+    from data_engineer_task_spark.plans.sketch import _K, _KMV_SCALE, _kernel_digest
 
     h = hashlib.md5()
     for mod in (sketch_mod, rollup_mod):

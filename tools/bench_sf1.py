@@ -81,7 +81,7 @@ FAMILIES = [
     "event_kmv_user_days",
     "brand_copurchase_triangles",
     "stream_running_user_totals",
-    # late-r7 sketch/IVM additions (ext34)
+    # late-r7 sketch/IVM additions
     "event_user_hll_distinct",
     "rolling_weekly_hll_users",
     "orders_incremental_join_merge",
